@@ -42,7 +42,7 @@ def test_spark_submit_py_files(tmp_path):
             os.path.join(REPO, "scripts", "submit_job.py"),
             "--entities", "200",
             "--sources", "10",
-            "--model", "majority",
+            "--model", "crh",
             "--partitions", "8",
         ],
         cwd=tmp_path,  # NOT the repo: bare `import trustfuse_spark` must fail here
@@ -55,7 +55,7 @@ def test_spark_submit_py_files(tmp_path):
     payload = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     assert payload, proc.stdout[-2000:]
     out = json.loads(payload[-1])
-    assert out["model"] == "majority"
+    assert out["model"] == "crh"
     assert out["n_triples"] > 0
     # provenance: the package must have been imported from the zip itself
     assert "trustfuse_spark.zip" in out["pkg"], out["pkg"]

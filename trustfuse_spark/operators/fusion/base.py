@@ -1,10 +1,14 @@
 """Shared machinery for truth-discovery models.
 
-Every model is the same Spark shape (SURVEY §2.4): two alternating grouped
-aggregations — truth per fact (bucket_id, entity, attr) and weight per
-(bucket_id, source) — iterated by a driver loop with broadcast weight joins
-and per-iteration lineage truncation. No per-row Python anywhere in this
-module.
+Every model alternates two steps (SURVEY §2.4): truth per fact (bucket_id,
+entity, attr) and weight per (bucket_id, source). Both keys lead with
+bucket_id, so a bucket is a closed unit of work. CRH runs each bucket's
+whole loop in one grouped-map task (``groupBy("bucket_id").applyInPandas``,
+numpy inside) and keeps the distributed form below for buckets too large
+for one Python worker. The other models, and that fallback, are the
+distributed form: two alternating grouped aggregations iterated by a driver
+loop with broadcast weight joins and per-iteration lineage truncation
+(``CheckpointRotator``). No per-row Python anywhere in this module.
 
 Claims contract (long form):
     bucket_id:int, source:string, entity:string, attr:string,
@@ -39,6 +43,25 @@ def split_claims(claims: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(categorical, numeric) claim partitions."""
     is_num = F.col("value_num").isNotNull()
     return claims.filter(~is_num), claims.filter(is_num)
+
+
+def drop_incomplete_claims(claims: DataFrame) -> DataFrame:
+    """Claims with every key set and a value: non-null bucket_id, source,
+    entity and attr, and a non-null value_str (categorical) or a non-null,
+    finite value_num (numeric).
+
+    The reference drops NaN cells before it builds the claim matrix
+    (model.py:145). A claim without a key or value belongs to no fact and
+    has nothing to vote for, and SQL grouping and pandas grouping disagree
+    on NULL keys, so it is dropped before any model sees it. An infinite
+    number (an overlong digit run cast to double) is dropped too: it turns
+    its fact's spread and every loss it enters into NaN."""
+    complete = F.col("value_str").isNotNull() | F.col("value_num").isNotNull()
+    for c in (*FACT_KEYS, "source"):
+        complete = complete & F.col(c).isNotNull()
+    # Spark orders NaN above +inf, so this also drops NaN
+    finite = F.abs(F.coalesce("value_num", F.lit(0.0))) < float("inf")
+    return claims.filter(complete & finite)
 
 
 def checkpoint(df: DataFrame) -> DataFrame:

@@ -12,6 +12,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Directory holding the trustfuse_spark package (a checkout or a zip).
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half of this host's memory (MemTotal), at most 16g."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(kb // 2048, DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(
     app_name: str = "trustfuse_spark",
@@ -70,10 +84,18 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        # Python workers start in the driver's cwd with the driver's
+        # PYTHONPATH; put the package on theirs so pandas UDFs can unpickle
+        # trustfuse_spark functions wherever the driver was started.
+        builder = builder.config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
