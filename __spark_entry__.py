@@ -2252,123 +2252,122 @@ def pagerank_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threads only reorder job submission across independent legs.
     from concurrent.futures import ThreadPoolExecutor
 
-    _pool = ThreadPoolExecutor(max_workers=6)
-    _f_pr = _pool.submit(pagerank, edges, iterations=3, damping=0.85)
-    _f_ts = _pool.submit(triangle_stats, edges)
-    _f_lpa = _pool.submit(label_propagation, edges, iterations=2)
-    _f_kc = _pool.submit(k_core, edges, k=7)
-    _f_aa = _pool.submit(link_prediction, edges)
-    _f_hi = _pool.submit(hits, edges, iterations=2)
+    with ThreadPoolExecutor(max_workers=6) as _pool:
+        _f_pr = _pool.submit(pagerank, edges, iterations=3, damping=0.85)
+        _f_ts = _pool.submit(triangle_stats, edges)
+        _f_lpa = _pool.submit(label_propagation, edges, iterations=2)
+        _f_kc = _pool.submit(k_core, edges, k=7)
+        _f_aa = _pool.submit(link_prediction, edges)
+        _f_hi = _pool.submit(hits, edges, iterations=2)
 
-    def _build_sssp():
-        from trustfuse_spark.operators.graph import shortest_paths
+        def _build_sssp():
+            from trustfuse_spark.operators.graph import shortest_paths
 
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        nid = F.col("node").substr(F.lit(2), F.lit(8)).cast("long")
-        wedges = edges.withColumn(
-            "weight",
-            (
+            nodes = (
+                edges.select(F.col("src").alias("node"))
+                .unionByName(edges.select(F.col("dst").alias("node")))
+                .distinct()
+            )
+            nid = F.col("node").substr(F.lit(2), F.lit(8)).cast("long")
+            wedges = edges.withColumn(
+                "weight",
                 (
-                    F.col("src").substr(F.lit(2), F.lit(8)).cast("long") * 3
-                    + F.col("dst").substr(F.lit(2), F.lit(8)).cast("long") * 5
-                )
-                % 7
-                + 1
-            ).cast("double"),
-        )
-        return shortest_paths(wedges, nodes.filter(nid % 41 == 0), rounds=3)
+                    (
+                        F.col("src").substr(F.lit(2), F.lit(8)).cast("long") * 3
+                        + F.col("dst").substr(F.lit(2), F.lit(8)).cast("long") * 5
+                    )
+                    % 7
+                    + 1
+                ).cast("double"),
+            )
+            return shortest_paths(wedges, nodes.filter(nid % 41 == 0), rounds=3)
 
-    _f_sp = _pool.submit(_build_sssp)
-    pr = _f_pr.result().select(
-        F.lit("pr").alias("gate"),
-        "node",
-        F.round("rank", 6).alias("rank"),
-        F.lit(None).cast("string").alias("label"),
-    )
-    ts = _f_ts.result()
-    tri = ts.select(
-        F.lit("tri").alias("gate"),
-        "node",
-        F.col("triangles").cast("double").alias("rank"),
-        F.lit(None).cast("string").alias("label"),
-    )
-    lcc = ts.select(
-        F.lit("lcc").alias("gate"),
-        "node",
-        F.round("lcc", 6).alias("rank"),
-        F.lit(None).cast("string").alias("label"),
-    )
-    lpa = _f_lpa.result().select(
-        F.lit("lpa").alias("gate"),
-        "node",
-        F.lit(None).cast("double").alias("rank"),
-        "label",
-    )
-    kc = _f_kc.result().select(
-        F.lit("kcore").alias("gate"),
-        "node",
-        F.col("core_deg").cast("double").alias("rank"),
-        F.lit(None).cast("string").alias("label"),
-    )
-    aa = _f_aa.result().select(
-        F.lit("aa").alias("gate"),
-        F.concat("node_a", F.lit("|"), "node_b").alias("node"),
-        F.col("adamic_adar").alias("rank"),
-        F.col("common_neighbors").cast("string").alias("label"),
-    )
-    # 'walk' — the DeepWalk corpus (graph.random_walks): one 3-step walk
-    # per node, next hop = poly31('start#walk#step')+Knuth-mix % out-degree
-    # over the dst-sorted adjacency, stopping at sinks; every visited
-    # (walk, step, node) row reaches the hash, so a wrong neighbor rank,
-    # degree, or hash hop breaks it. The oracle unrolls the three hops.
-    from trustfuse_spark.operators.graph import random_walks
-
-    rw = (
-        random_walks(edges, walk_len=3, walks_per_node=1, portable_hash=True)
-        .select(
-            F.concat_ws("|", "start", F.col("walk").cast("string")).alias("wid"),
-            F.col("step").cast("double").alias("rank"),
-            F.col("node").alias("label"),
+        _f_sp = _pool.submit(_build_sssp)
+        pr = _f_pr.result().select(
+            F.lit("pr").alias("gate"),
+            "node",
+            F.round("rank", 6).alias("rank"),
+            F.lit(None).cast("string").alias("label"),
         )
-        .select(
-            F.lit("walk").alias("gate"),
-            F.col("wid").alias("node"),
-            "rank",
+        ts = _f_ts.result()
+        tri = ts.select(
+            F.lit("tri").alias("gate"),
+            "node",
+            F.col("triangles").cast("double").alias("rank"),
+            F.lit(None).cast("string").alias("label"),
+        )
+        lcc = ts.select(
+            F.lit("lcc").alias("gate"),
+            "node",
+            F.round("lcc", 6).alias("rank"),
+            F.lit(None).cast("string").alias("label"),
+        )
+        lpa = _f_lpa.result().select(
+            F.lit("lpa").alias("gate"),
+            "node",
+            F.lit(None).cast("double").alias("rank"),
             "label",
         )
-    )
-    # 'neg' — KG-embedding negative sampling (kg.negative_samples): each
-    # edge's corrupted tail = the NEXT edge's tail within its poly31 hash
-    # bucket (in-batch corruption — no global entity index), with the
-    # filtered-setting collision flag from a left join on the corrupted
-    # pair. node = 'src|dst', label = neg tail, rank = is_collision.
-    from trustfuse_spark.operators.kg import negative_samples
+        kc = _f_kc.result().select(
+            F.lit("kcore").alias("gate"),
+            "node",
+            F.col("core_deg").cast("double").alias("rank"),
+            F.lit(None).cast("string").alias("label"),
+        )
+        aa = _f_aa.result().select(
+            F.lit("aa").alias("gate"),
+            F.concat("node_a", F.lit("|"), "node_b").alias("node"),
+            F.col("adamic_adar").alias("rank"),
+            F.col("common_neighbors").cast("string").alias("label"),
+        )
+        # 'walk' — the DeepWalk corpus (graph.random_walks): one 3-step walk
+        # per node, next hop = poly31('start#walk#step')+Knuth-mix % out-degree
+        # over the dst-sorted adjacency, stopping at sinks; every visited
+        # (walk, step, node) row reaches the hash, so a wrong neighbor rank,
+        # degree, or hash hop breaks it. The oracle unrolls the three hops.
+        from trustfuse_spark.operators.graph import random_walks
 
-    ng = negative_samples(edges, n_buckets=16, portable_hash=True).select(
-        F.lit("neg").alias("gate"),
-        F.concat_ws("|", "src", "dst").alias("node"),
-        F.col("is_collision").cast("double").alias("rank"),
-        F.col("neg_dst").alias("label"),
-    )
-    # 'sssp' — multi-source Bellman-Ford (graph.shortest_paths, 3
-    # relaxation rounds) from the id%41==0 seed nodes over deterministic
-    # integer-valued weights w = (3*src_id + 5*dst_id) % 7 + 1: every path
-    # sum is exact in double, so distances ride unrounded; the oracle
-    # unrolls the three min-plus rounds as chained CTEs.
-    from trustfuse_spark.operators.graph import shortest_paths
+        rw = (
+            random_walks(edges, walk_len=3, walks_per_node=1, portable_hash=True)
+            .select(
+                F.concat_ws("|", "start", F.col("walk").cast("string")).alias("wid"),
+                F.col("step").cast("double").alias("rank"),
+                F.col("node").alias("label"),
+            )
+            .select(
+                F.lit("walk").alias("gate"),
+                F.col("wid").alias("node"),
+                "rank",
+                "label",
+            )
+        )
+        # 'neg' — KG-embedding negative sampling (kg.negative_samples): each
+        # edge's corrupted tail = the NEXT edge's tail within its poly31 hash
+        # bucket (in-batch corruption — no global entity index), with the
+        # filtered-setting collision flag from a left join on the corrupted
+        # pair. node = 'src|dst', label = neg tail, rank = is_collision.
+        from trustfuse_spark.operators.kg import negative_samples
 
-    sp = _f_sp.result().select(
-        F.lit("sssp").alias("gate"),
-        "node",
-        F.col("dist").alias("rank"),
-        F.lit(None).cast("string").alias("label"),
-    )
-    hi = _f_hi.result()
-    _pool.shutdown()
+        ng = negative_samples(edges, n_buckets=16, portable_hash=True).select(
+            F.lit("neg").alias("gate"),
+            F.concat_ws("|", "src", "dst").alias("node"),
+            F.col("is_collision").cast("double").alias("rank"),
+            F.col("neg_dst").alias("label"),
+        )
+        # 'sssp' — multi-source Bellman-Ford (graph.shortest_paths, 3
+        # relaxation rounds) from the id%41==0 seed nodes over deterministic
+        # integer-valued weights w = (3*src_id + 5*dst_id) % 7 + 1: every path
+        # sum is exact in double, so distances ride unrounded; the oracle
+        # unrolls the three min-plus rounds as chained CTEs.
+        from trustfuse_spark.operators.graph import shortest_paths
+
+        sp = _f_sp.result().select(
+            F.lit("sssp").alias("gate"),
+            "node",
+            F.col("dist").alias("rank"),
+            F.lit(None).cast("string").alias("label"),
+        )
+        hi = _f_hi.result()
     hub = hi.select(
         F.lit("hub").alias("gate"),
         "node",
@@ -2449,59 +2448,58 @@ def lm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic and threads only reorder job submission.
     from concurrent.futures import ThreadPoolExecutor
 
-    _bpe_pool = ThreadPoolExecutor(max_workers=1)
-    _fut_bpe = _bpe_pool.submit(train_bpe, d, 3)
-    a = vocab_topk(d, top_n=40).select(
-        F.lit("vocab").alias("gate"),
-        F.col("token").alias("key"),
-        F.col("cnt").cast("double").alias("m1"),
-        F.col("rank").cast("double").alias("m2"),
-        F.col("coverage").alias("m3"),
-        F.lit(None).cast("double").alias("m4"),
-    )
-    # cache: the 'score' and 'ppl' legs both consume the scoring — without
-    # it the bigram-LM estimation+scoring chain executes twice in the one
-    # final action
-    lm_scores = bigram_lm_score(d, alpha=0.5).cache()
-    b = lm_scores.select(
-        F.lit("score").alias("gate"),
-        F.col("doc_id").cast("string").alias("key"),
-        F.col("n_bigrams").cast("double").alias("m1"),
-        F.col("avg_logprob").alias("m2"),
-        F.lit(None).cast("double").alias("m3"),
-        F.lit(None).cast("double").alias("m4"),
-    )
-    # CCNet perplexity-bucket leg (lm.perplexity_buckets, exact-rank path
-    # over the shared scoring): head/middle/tail tier + global rank per
-    # doc; unscored (<2-token) docs carry NULLs. The oracle re-ranks the
-    # same rounded scores with ROW_NUMBER and re-derives the floor bucket.
-    p = perplexity_buckets(scores=lm_scores, n_buckets=3).select(
-        F.lit("ppl").alias("gate"),
-        F.col("doc_id").cast("string").alias("key"),
-        F.col("bucket").cast("double").alias("m1"),
-        F.col("rank").cast("double").alias("m2"),
-        F.lit(None).cast("double").alias("m3"),
-        F.lit(None).cast("double").alias("m4"),
-    )
-    c = dsir_select(
-        d, F.col("lang") == "en", k=100, n_buckets=32, lam=0.5, salt=3,
-        portable_hash=portable,
-    ).select(
-        F.lit("dsir").alias("gate"),
-        F.col("doc_id").cast("string").alias("key"),
-        F.col("n_feats").cast("double").alias("m1"),
-        F.col("log_weight").alias("m2"),
-        F.col("gumbel_key").alias("m3"),
-        F.col("selected").cast("double").alias("m4"),
-    )
-    # BPE legs (lm.train_bpe, 3 merge rounds): the learned rules ride as
-    # 'rank:a b' keys with their counts, every word's final segmentation as
-    # 'word|syms' keys — so a wrong pair, wrong rule order, or any
-    # mis-merged word breaks the hash. The oracle re-derives each round's
-    # argmax pair and replays the greedy merge fold as a recursive CTE
-    # (same sequential-fold pattern as the pack_sequences oracle).
-    merges, bpe_vocab = _fut_bpe.result()
-    _bpe_pool.shutdown()
+    with ThreadPoolExecutor(max_workers=1) as _bpe_pool:
+        _fut_bpe = _bpe_pool.submit(train_bpe, d, 3)
+        a = vocab_topk(d, top_n=40).select(
+            F.lit("vocab").alias("gate"),
+            F.col("token").alias("key"),
+            F.col("cnt").cast("double").alias("m1"),
+            F.col("rank").cast("double").alias("m2"),
+            F.col("coverage").alias("m3"),
+            F.lit(None).cast("double").alias("m4"),
+        )
+        # cache: the 'score' and 'ppl' legs both consume the scoring — without
+        # it the bigram-LM estimation+scoring chain executes twice in the one
+        # final action
+        lm_scores = bigram_lm_score(d, alpha=0.5).cache()
+        b = lm_scores.select(
+            F.lit("score").alias("gate"),
+            F.col("doc_id").cast("string").alias("key"),
+            F.col("n_bigrams").cast("double").alias("m1"),
+            F.col("avg_logprob").alias("m2"),
+            F.lit(None).cast("double").alias("m3"),
+            F.lit(None).cast("double").alias("m4"),
+        )
+        # CCNet perplexity-bucket leg (lm.perplexity_buckets, exact-rank path
+        # over the shared scoring): head/middle/tail tier + global rank per
+        # doc; unscored (<2-token) docs carry NULLs. The oracle re-ranks the
+        # same rounded scores with ROW_NUMBER and re-derives the floor bucket.
+        p = perplexity_buckets(scores=lm_scores, n_buckets=3).select(
+            F.lit("ppl").alias("gate"),
+            F.col("doc_id").cast("string").alias("key"),
+            F.col("bucket").cast("double").alias("m1"),
+            F.col("rank").cast("double").alias("m2"),
+            F.lit(None).cast("double").alias("m3"),
+            F.lit(None).cast("double").alias("m4"),
+        )
+        c = dsir_select(
+            d, F.col("lang") == "en", k=100, n_buckets=32, lam=0.5, salt=3,
+            portable_hash=portable,
+        ).select(
+            F.lit("dsir").alias("gate"),
+            F.col("doc_id").cast("string").alias("key"),
+            F.col("n_feats").cast("double").alias("m1"),
+            F.col("log_weight").alias("m2"),
+            F.col("gumbel_key").alias("m3"),
+            F.col("selected").cast("double").alias("m4"),
+        )
+        # BPE legs (lm.train_bpe, 3 merge rounds): the learned rules ride as
+        # 'rank:a b' keys with their counts, every word's final segmentation as
+        # 'word|syms' keys — so a wrong pair, wrong rule order, or any
+        # mis-merged word breaks the hash. The oracle re-derives each round's
+        # argmax pair and replays the greedy merge fold as a recursive CTE
+        # (same sequential-fold pattern as the pack_sequences oracle).
+        merges, bpe_vocab = _fut_bpe.result()
     e1 = spark.createDataFrame(
         [(i + 1, a_, b_, n_) for i, (a_, b_, n_) in enumerate(merges)],
         "rank int, a string, b string, n long",

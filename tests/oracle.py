@@ -15,7 +15,7 @@ from collections import defaultdict
 import numpy as np
 import pandas as pd
 
-from trustfuse_spark.operators.fusion.truthfinder import jaro_py
+from trustfuse_spark.functions.similarity import jaro_py
 
 
 def _facts(claims: pd.DataFrame):

@@ -1,8 +1,12 @@
 """Tests for bucketize / dedup / cc / linking / textstats / ann / multimodal."""
 
+import random
+
 import pyspark.sql.functions as F
 import pytest
 
+from trustfuse_spark.datagen import gen_docs
+from trustfuse_spark.functions.similarity import jaro_py
 from trustfuse_spark.operators.ann import brute_force_topk, ivf_topk
 from trustfuse_spark.operators.bucketize import (
     cumulative_bucket,
@@ -11,6 +15,7 @@ from trustfuse_spark.operators.bucketize import (
     sessionize,
     upsert_in_bucket,
 )
+from trustfuse_spark.operators import cc, linking
 from trustfuse_spark.operators.cc import connected_components
 from trustfuse_spark.operators.dedup import (
     exact_duplicates,
@@ -24,6 +29,7 @@ from trustfuse_spark.operators.multimodal import (
     media_table_from_refs,
 )
 from trustfuse_spark.operators.textstats import doc_stats
+from trustfuse_spark.plans.pipeline import docs_to_claims
 
 
 def test_sessionize_gap_rule(spark):
@@ -137,19 +143,55 @@ def test_presence_intervals(spark):
     assert out.get("v2", False) is False or "v2" not in out
 
 
-def test_connected_components(spark):
+# LOCAL_MAX_EDGES / LOCAL_MAX_SURFACES that force each path
+PATHS = {"local": 10**9, "distributed": -1}
+
+
+def _components(monkeypatch, path, edges, **kwargs):
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", PATHS[path])
+    return {r["node"]: r["component"] for r in connected_components(edges, **kwargs).collect()}
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_connected_components(spark, monkeypatch, path):
+    # duplicate and reversed edges, and 8 with only a self-loop
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (8, 8), (7, 6)], ["src", "dst"]
+        [(1, 2), (2, 3), (5, 6), (8, 8), (7, 6), (1, 2), (2, 1), (9, 9), (9, 10)],
+        ["src", "dst"],
     )
-    comp = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[5] == comp[6] == comp[7] == 5
+    comp = _components(monkeypatch, path, edges)
+    assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 5, 9: 9, 10: 9}
     # salted variant identical
-    comp2 = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, salt_hubs=True).collect()
+    assert _components(monkeypatch, path, edges, salt_hubs=True) == comp
+    assert _components(monkeypatch, path, edges.limit(0)) == {}
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_connected_components_string_order(spark, monkeypatch, path):
+    """Component = min node in Spark's UTF-8 byte order, which is code-point
+    order: 'f' < 'é' and 'Z' < 'a' (a locale would say the opposite), and
+    U+FF61 < U+10000 (UTF-16 code units would say the opposite)."""
+    edges = spark.createDataFrame(
+        [("é", "f"), ("a", "Z"), ("\U00010000", "\uff61"), ("ä", "b"), ("b", "é")],
+        "src string, dst string",
+    )
+    assert _components(monkeypatch, path, edges) == {
+        "é": "b", "f": "b", "ä": "b", "b": "b",
+        "a": "Z", "Z": "Z",
+        "\U00010000": "\uff61", "\uff61": "\uff61",
     }
-    assert comp == comp2
+
+
+def test_connected_components_paths_agree(spark, monkeypatch):
+    """A random sparse graph (chains, trees and cycles) and a long path fed
+    in reverse give the same components on both paths."""
+    rng = random.Random(5)
+    rows = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
+    rows += [(i + 1, i) for i in range(500, 560)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    local = _components(monkeypatch, "local", edges)
+    assert local == _components(monkeypatch, "distributed", edges)
+    assert {local[i] for i in range(500, 561)} == {500}
 
 
 def test_dedup_exact_and_near(spark):
@@ -266,16 +308,44 @@ def test_minhash_prefilters_lossless(spark):
     assert len(want) > 0  # the corpus must actually exercise the path
 
 
-def test_linking_canonicalize(spark):
+def _links_and_canon(monkeypatch, path, mentions, min_jaro):
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", PATHS[path])
+    monkeypatch.setattr(linking, "LOCAL_MAX_SURFACES", PATHS[path])
+    links = candidate_links(mentions, min_jaro=min_jaro)
+    canon = canonicalize(mentions, links)
+    return (
+        sorted(tuple(r) for r in links.collect()),
+        {r["surface"]: r["canonical_id"] for r in canon.collect()},
+    )
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_linking_canonicalize(spark, monkeypatch, path):
     mentions = spark.createDataFrame(
         [("Barack Obama",), ("Barack Obamaa",), ("B. Obama",), ("Angela Merkel",)],
         ["surface"],
     )
-    links = candidate_links(mentions, min_jaro=0.85)
-    canon = canonicalize(mentions, links)
-    out = {r["surface"]: r["canonical_id"] for r in canon.collect()}
-    assert out["Barack Obama"] == out["Barack Obamaa"]
-    assert out["Angela Merkel"] != out["Barack Obama"]
+    links, out = _links_and_canon(monkeypatch, path, mentions, 0.85)
+    assert links == [("Barack Obama", "Barack Obamaa", jaro_py("Barack Obama", "Barack Obamaa"))]
+    assert out["Barack Obama"] == out["Barack Obamaa"] == "Barack Obama"
+    assert out["Angela Merkel"] == "Angela Merkel"
+    assert out["B. Obama"] == "B. Obama"
+    none = mentions.limit(0)
+    assert _links_and_canon(monkeypatch, path, none, 0.85) == ([], {})
+
+
+def test_linking_paths_agree_on_noisy_surfaces(spark, monkeypatch):
+    """datagen's typo'd mention surfaces: the driver pass and the distributed
+    LSH + Jaro UDF give the same links with the same scores, and the same
+    surface -> canonical map."""
+    docs = gen_docs(spark, n_entities=40, n_sources=5, n_revs=2, entity_noise=True)
+    mentions = docs_to_claims(docs).select(F.col("entity").alias("surface")).distinct()
+    mentions = mentions.localCheckpoint(eager=True)
+    local = _links_and_canon(monkeypatch, "local", mentions, 0.9)
+    assert local == _links_and_canon(monkeypatch, "distributed", mentions, 0.9)
+    links, canon = local
+    assert len(links) > 20  # the typo'd surfaces do link
+    assert len(set(canon.values())) < len(canon)
 
 
 def test_textstats(spark):

@@ -17,7 +17,7 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from trustfuse_spark.session import get_spark
 from trustfuse_spark.operators.fusion.crh import fuse_crh
-from trustfuse_spark.operators.fusion.truthfinder import jaro_udf
+from trustfuse_spark.functions.similarity import jaro_udf
 
 spark = get_spark(app_name="cwd_probe", master="local[2]", shuffle_partitions=2)
 claims = spark.createDataFrame(

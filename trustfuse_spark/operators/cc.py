@@ -1,9 +1,20 @@
 """Connected components over an edge list — the canonicalization core
 (north_star: iterative min-id propagation over the mention graph).
 
-Implements the alternating large-star / small-star algorithm (Kiveris et
-al., "Connected Components in MapReduce and Beyond", public literature) as
-DataFrame aggregations:
+Component = the minimum node of the component, on both paths below. The
+edge list (self-loops and edges with a NULL end dropped) is materialized
+once, then probed with a bounded prefix: ``limit(LOCAL_MAX_EDGES + 1)``
+brought to the driver.
+
+Local path (at most ``LOCAL_MAX_EDGES`` edges): one vectorized numpy pass
+labels the nodes — ``np.unique`` node ids, then root hooking with
+``np.minimum.at`` plus pointer jumping until a fixpoint. The ids sort by
+code point, which is Spark's UTF-8 binary string order, so the minimum is
+the same node. The result is a driver-built relation marked for broadcast.
+
+Distributed path (above the bound): the alternating large-star /
+small-star algorithm (Kiveris et al., "Connected Components in MapReduce
+and Beyond", public literature) as DataFrame aggregations:
 
   large-star: per node u, every strictly-larger neighbor points at
               m = min(N(u) ∪ {u})
@@ -16,14 +27,30 @@ Convergence check = one scalar agg (edge-set hash-sum). Skew: hub nodes
 is an algebraic min + collect of DISTINCT smaller neighbors, and AQE's skew
 handling splits the shuffle — for adversarial hubs pass `salt_hubs=True`
 to pre-aggregate neighbor minima in two phases.
+
+The bound caps driver memory, not time: the local path won at every
+measured size. Random graphs with 1.5 nodes per edge, local vs distributed
+wall time (4 vCPUs, 16 GB): long ids, 100k edges 2.3 vs 20.2 s, 1M 7.8 vs
+51.1 s, 4M 13.5 vs 130.2 s; surface-like string nodes, 1M 16.4 vs 83.8 s,
+4M 45.9 s local. The Python driver peaked at 155 MB, 259 MB and 611 MB
+(long) and 432 MB and 1.26 GB (string). Edge lists past 4M, such as the
+near-duplicate pair graph of a web-scale corpus (``dedup.neardup_drop_ids``),
+take the star rounds.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from trustfuse_spark.operators.fusion.base import CheckpointRotator, checkpoint
+
+# Largest edge list labelled on the driver: the largest measured size; with
+# string nodes it peaked at 1.26 GB of Python driver RSS.
+LOCAL_MAX_EDGES = 4_000_000
 
 
 def _degree_capped_min(edges: DataFrame, salt: int) -> DataFrame:
@@ -62,6 +89,27 @@ def _star_round(edges: DataFrame, large: bool, salt_hubs: bool) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
+def _label_components(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """-> (node, component) arrays: every node of the edge list and the
+    minimum node of its component. Duplicate edges change nothing."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = inv[: len(src)], inv[len(src):]
+    # lab[i] <= i always; after the jumps every label is a root
+    lab = np.arange(len(ids))
+    while True:
+        prev = lab.copy()
+        lo = np.minimum(prev[u], prev[v])
+        np.minimum.at(lab, prev[u], lo)  # hook both roots to the smaller
+        np.minimum.at(lab, prev[v], lo)
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab, prev):
+            return ids, ids[lab]
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -72,17 +120,37 @@ def connected_components(
     """-> (node, component) with component = min node id of the component.
 
     Nodes are whatever orderable type the edge columns carry (long ids
-    preferred at scale — hash surface forms to ids first).
+    preferred at scale — hash surface forms to ids first). A node whose
+    only edges are self-loops is not in the output. Edge lists of at most
+    ``LOCAL_MAX_EDGES`` edges are labelled on the driver and come back
+    marked for broadcast; ``max_rounds`` and ``salt_hubs`` apply to the
+    distributed star rounds above that bound.
     """
+    # Duplicates stay until the path is known: the local labelling ignores
+    # them, so only the star rounds pay a distinct shuffle.
     e = checkpoint(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
             F.col("src") != F.col("dst")
-        ).distinct()
+        )
     )
     all_nodes = e.select(F.col("src").alias("node")).union(
         e.select(F.col("dst").alias("node"))
     ).distinct()
 
+    head = e.limit(LOCAL_MAX_EDGES + 1).toPandas()
+    if len(head) <= LOCAL_MAX_EDGES:
+        node, comp = _label_components(head["src"].to_numpy(), head["dst"].to_numpy())
+        node_type = all_nodes.schema["node"].dataType
+        return F.broadcast(
+            e.sparkSession.createDataFrame(
+                pd.DataFrame({"node": node, "component": comp}),
+                T.StructType(
+                    [T.StructField("node", node_type), T.StructField("component", node_type)]
+                ),
+            )
+        )
+
+    e = checkpoint(e.distinct())
     rot = CheckpointRotator(edges.sparkSession)
     prev_sig = None
     for _ in range(max_rounds):

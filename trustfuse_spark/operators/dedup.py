@@ -571,10 +571,11 @@ def neardup_drop_ids(
 
     Feed the output of `near_duplicates_minhash` / `simhash_near_dups` /
     `embedding_near_dups` in, hand the result to
-    `plans.curate.curate_corpus(drop_ids=...)`. CC is the large-star /
-    small-star loop (operators/cc.py), so a viral doc with millions of
-    near-dups is handled by ``salt_hubs`` rather than a driver-side union-
-    find."""
+    `plans.curate.curate_corpus(drop_ids=...)`. CC is operators/cc.py: pair
+    graphs of at most ``cc.LOCAL_MAX_EDGES`` edges are labelled on the
+    driver in one numpy pass; larger ones run the large-star / small-star
+    rounds, where ``salt_hubs`` handles a viral doc with millions of
+    near-dups."""
     from trustfuse_spark.operators.cc import connected_components
 
     comp = connected_components(pairs, src=id_a, dst=id_b, salt_hubs=salt_hubs)

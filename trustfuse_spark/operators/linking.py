@@ -8,25 +8,89 @@ LSH-blocked candidate pairs -> similarity scorer -> connected components ->
 canonical entity id.
 
   candidate_links : MinHash-LSH blocking over surface shingles + Jaro
-                    verification (Arrow-batched pandas UDF)
+                    verification
   canonicalize    : connected components over accepted links; canonical id =
                     the lexicographically smallest surface in the component
   link_dictionary : broadcast dim join mention->known entity id (the
                     reference's QID path) with exact-match fast path
+
+candidate_links has two paths. Spark computes the surfaces' MinHash
+signatures on both, so every hash is the same, and materializes them once;
+a bounded-prefix probe, ``limit(LOCAL_MAX_SURFACES + 1)`` brought to the
+driver, picks the path.
+
+  local       (at most LOCAL_MAX_SURFACES surfaces): band keys, the
+              MAX_BUCKET cut, the id_a < id_b pairs and the Jaro scores are
+              computed on the driver with numpy/pandas and ``jaro_py``
+  distributed (above the bound): ``lsh_candidate_pairs`` and the Jaro
+              pandas UDF, one Arrow batch per task
+
+Both give the same links with the same scores. The bound is where the
+driver's single-threaded Jaro pass stops paying for the Spark jobs it
+saves. Measured with datagen-style noisy surfaces (about 1.7 per entity,
+min_jaro 0.9, 4 vCPUs, 16 GB), local vs distributed wall time: 17k
+surfaces 6.8 vs 11.9 s, 102k 20.9 vs 27.6 s, 204k 51.5 vs 57.9 s, 408k
+121.7 vs 104.9 s. At 102k surfaces (384k candidate pairs) cProfile put 90%
+of the driver pass in Jaro, and the Python driver peaked at 190 MB,
+427 MB, 783 MB and 1.5 GB. Surface sets past 200k, i.e. entity linking past roughly 120k
+noisy entities, take the distributed path.
+
+canonicalize gets the same split from ``connected_components``
+(operators/cc.py), whose local result is joined as a broadcast.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from trustfuse_spark.functions.similarity import jaro_py, jaro_udf
 from trustfuse_spark.operators.cc import connected_components
 from trustfuse_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     shingles,
 )
-from trustfuse_spark.operators.fusion.truthfinder import jaro_udf
+from trustfuse_spark.operators.fusion.base import checkpoint
+
+# Largest surface set blocked and verified on the driver: the local path won
+# at 204k surfaces (51.5 vs 57.9 s) and lost at 408k (121.7 vs 104.9 s).
+LOCAL_MAX_SURFACES = 200_000
+
+# lsh_candidate_pairs' default: larger band buckets are dropped on both paths.
+MAX_BUCKET = 1000
+
+
+def _local_links(
+    sig: pd.DataFrame, bands: int, rows_per_band: int, min_jaro: float
+) -> pd.DataFrame:
+    """The distributed blocking and verification in one driver pass:
+    surfaces whose signatures agree on a whole band slice are candidates,
+    band buckets of more than MAX_BUCKET surfaces are dropped, and each
+    distinct (id_a < id_b) pair is kept when its Jaro score >= min_jaro."""
+    sig = sig.sort_values("id", ignore_index=True)  # row order = string order
+    ids = sig["id"].to_numpy()
+    mat = np.stack(sig["sig"].to_numpy()) if len(sig) else np.empty((0, bands * rows_per_band))
+    banded = []
+    for b in range(bands):
+        _, bucket = np.unique(
+            mat[:, b * rows_per_band : (b + 1) * rows_per_band], axis=0, return_inverse=True
+        )
+        bucket = bucket.reshape(-1)
+        keep = np.bincount(bucket)[bucket] <= MAX_BUCKET
+        banded.append(
+            pd.DataFrame({"band": b, "bucket": bucket[keep], "row": np.flatnonzero(keep)})
+        )
+    banded = pd.concat(banded, ignore_index=True)
+    pairs = banded.merge(banded, on=["band", "bucket"])
+    pairs = pairs.loc[pairs["row_x"] < pairs["row_y"], ["row_x", "row_y"]].drop_duplicates()
+    a, b = ids[pairs["row_x"].to_numpy()], ids[pairs["row_y"].to_numpy()]
+    score = np.array([jaro_py(x, y) for x, y in zip(a, b)], dtype="float64")
+    keep = score >= min_jaro
+    return pd.DataFrame({"surface_a": a[keep], "surface_b": b[keep], "score": score[keep]})
 
 
 def candidate_links(
@@ -38,7 +102,12 @@ def candidate_links(
     min_jaro: float = 0.85,
 ) -> DataFrame:
     """Distinct surfaces -> scored candidate pairs (surface_a, surface_b,
-    score) with score = Jaro similarity >= min_jaro."""
+    score) with score = Jaro similarity >= min_jaro.
+
+    Spark computes the MinHash signatures on both paths. Up to
+    ``LOCAL_MAX_SURFACES`` signatures are banded, paired and Jaro-scored on
+    the driver; more run ``lsh_candidate_pairs`` and the Jaro pandas UDF.
+    """
     surfaces = (
         mentions.select(F.col(surface_col).alias("id"))
         .distinct()
@@ -46,11 +115,25 @@ def candidate_links(
     )
     # fan_out=False: surfaces sit behind a distinct() shuffle, so the
     # partitioning is already AQE-sized and the _fan_out probe would
-    # materialize the upstream stages at plan-build time (dedup.shingles)
-    sh = shingles(surfaces, "id", "__txt", n, fan_out=False)
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(sh, num_hashes), bands, num_hashes // bands
-    )
+    # materialize the upstream stages at plan-build time (dedup.shingles).
+    # distinct=False: min over the shingle multiset == min over the set.
+    sh = shingles(surfaces, "id", "__txt", n, distinct=False, fan_out=False)
+    sig = checkpoint(minhash_signatures(sh, num_hashes))
+    rows_per_band = num_hashes // bands
+    head = sig.limit(LOCAL_MAX_SURFACES + 1).toPandas()
+    if len(head) <= LOCAL_MAX_SURFACES:
+        id_type = sig.schema["id"].dataType
+        return sig.sparkSession.createDataFrame(
+            _local_links(head, bands, rows_per_band, min_jaro),
+            T.StructType(
+                [
+                    T.StructField("surface_a", id_type),
+                    T.StructField("surface_b", id_type),
+                    T.StructField("score", T.DoubleType()),
+                ]
+            ),
+        )
+    pairs = lsh_candidate_pairs(sig, bands, rows_per_band, MAX_BUCKET)
     scored = pairs.withColumn("score", jaro_udf(F.col("id_a"), F.col("id_b")))
     return scored.filter(F.col("score") >= min_jaro).select(
         F.col("id_a").alias("surface_a"),
@@ -69,7 +152,9 @@ def canonicalize(
 
     Components over surface-similarity links; canonical id = smallest
     surface string of the component (hash to longs first at scale; strings
-    keep the test surface readable)."""
+    keep the test surface readable). Link graphs within
+    ``cc.LOCAL_MAX_EDGES`` come back from the driver marked for broadcast,
+    so the mentions are not shuffled for this join."""
     comp = connected_components(
         links, src="surface_a", dst="surface_b", salt_hubs=salt_hubs
     ).select(F.col("node").alias(surface_col), F.col("component").alias("canonical_id"))
