@@ -34,17 +34,21 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=64)
     args = ap.parse_args()
 
+    # spark-submit puts the --py-files zip on the driver's PYTHONPATH before
+    # this script starts, so the package imports before the session exists.
+    import trustfuse_spark
+    from trustfuse_spark.session import STATIC_CONF
+
     # Master / memory / ActiveProcessorCount come from the spark-submit
-    # command line — this script only sets job-shape conf.
+    # command line — this script only sets job-shape conf, plus the engine's
+    # JVM-wide settings, which Spark reads only when the session starts.
     spark = (
         SparkSession.builder.appName("trustfuse_submit")
         .config("spark.sql.shuffle.partitions", str(args.partitions))
         .config("spark.sql.adaptive.enabled", "true")
+        .config(map=STATIC_CONF)
         .getOrCreate()
     )
-    # imports AFTER getOrCreate: the zip from --py-files is on sys.path of
-    # driver and executors alike
-    import trustfuse_spark
     from trustfuse_spark.datagen import gen_docs
     from trustfuse_spark.plans.pipeline import run_pipeline
 
@@ -72,6 +76,7 @@ def main() -> None:
                 "docs_per_sec": round(n_docs / wall, 1),
                 "master": spark.sparkContext.master,
                 "pkg": trustfuse_spark.__file__,
+                "static_conf": {k: spark.conf.get(k) for k in STATIC_CONF},
             }
         )
     )

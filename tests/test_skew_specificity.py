@@ -159,6 +159,38 @@ def test_semantic_dedup_numpy_parity(spark):
     assert expect, "test corpus must plant at least one drop edge"
 
 
+def test_semantic_dedup_null_and_ragged_vectors(spark):
+    """A NULL vector or a pair of unequal lengths scores a NULL cosine and is
+    dropped by the threshold filter; it does not fail the stage, and the
+    well-formed pairs around it still dedup."""
+    from trustfuse_spark.operators.dedup import _cosine_ltr, semantic_dedup
+
+    v = [0.5, -1.0, 2.0, 0.25, 1.5, -0.75, 1.0, 3.0]
+    rows = [
+        (0, v),
+        (1, list(v)),  # clone of 0
+        (2, None),
+        (3, v[:6]),  # ragged against 0, 1 and 5
+        (4, v[:6]),  # clone of 3
+        (5, [1.0] * 8),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = semantic_dedup(df, "vec_id", "embedding", threshold=0.5, cell_expr=F.lit(0))
+    got = {r["id"]: (r["keeper"], round(r["cosine"], 9)) for r in out.collect()}
+    assert got == {1: (0, 1.0), 4: (3, 1.0), 5: (0, round(6.5 / np.sqrt(18.125 * 8), 9))}
+
+    a, b = df.alias("a"), df.alias("b")
+    pairs = a.crossJoin(b).select(
+        F.col("a.vec_id").alias("i"),
+        F.col("b.vec_id").alias("j"),
+        _cosine_ltr(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
+    )
+    cos = {(r["i"], r["j"]): r["c"] for r in pairs.collect()}
+    for (i, j), c in cos.items():
+        valid = i != 2 and j != 2 and (i in (3, 4)) == (j in (3, 4))
+        assert (c is not None) == valid, (i, j, c)
+
+
 def test_semantic_dedup_kmeans_path(spark):
     """Production path (trained k-means-lite centroids): every planted
     exact clone is dropped against its original, nothing else is."""

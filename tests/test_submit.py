@@ -19,6 +19,8 @@ import os
 import shutil
 import subprocess
 
+from trustfuse_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
@@ -59,3 +61,7 @@ def test_spark_submit_py_files(tmp_path):
     assert out["n_triples"] > 0
     # provenance: the package must have been imported from the zip itself
     assert "trustfuse_spark.zip" in out["pkg"], out["pkg"]
+    # the submitted session carries the engine's JVM-wide settings
+    assert out["static_conf"] == {
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES)
+    }

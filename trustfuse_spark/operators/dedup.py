@@ -680,18 +680,30 @@ def _cosine_ltr(va: pd.Series, vb: pd.Series) -> pd.Series:
     the same doubles), but vectorized across the whole Arrow batch instead
     of interpreted per element (the verify stage of the embedding dedup
     legs was fold-dominated). float32 inputs widen to float64 BEFORE any
-    product (exact — the same per-element cast the fold applied)."""
-    A = np.vstack(va.to_numpy()).astype(np.float64, copy=False)
-    B = np.vstack(vb.to_numpy()).astype(np.float64, copy=False)
-    n = len(A)
-    dot = np.zeros(n)
-    na = np.zeros(n)
-    nb = np.zeros(n)
-    for j in range(A.shape[1]):
-        dot += A[:, j] * B[:, j]
-        na += A[:, j] * A[:, j]
-        nb += B[:, j] * B[:, j]
-    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+    product (exact — the same per-element cast the fold applied).
+
+    A NULL vector or a pair of unequal lengths gives a NULL cosine, as the
+    fold did (``zip_with`` pads the shorter side with NULLs), so the
+    ``>= threshold`` filter drops the row instead of the stage failing.
+    Pairs are stacked per common length; NaN leaves the UDF as NULL."""
+    va, vb = va.to_numpy(), vb.to_numpy()
+    la = np.array([-1 if v is None else len(v) for v in va])
+    lb = np.array([-1 if v is None else len(v) for v in vb])
+    ok = (la == lb) & (la >= 0)
+    out = np.full(len(va), np.nan)
+    for d in np.unique(la[ok]):
+        idx = np.flatnonzero(ok & (la == d))
+        A = np.vstack(va[idx]).astype(np.float64, copy=False)
+        B = np.vstack(vb[idx]).astype(np.float64, copy=False)
+        dot = np.zeros(len(idx))
+        na = np.zeros(len(idx))
+        nb = np.zeros(len(idx))
+        for j in range(d):
+            dot += A[:, j] * B[:, j]
+            na += A[:, j] * A[:, j]
+            nb += B[:, j] * B[:, j]
+        out[idx] = dot / (np.sqrt(na) * np.sqrt(nb))
+    return pd.Series(out)
 
 
 def axis_sign_cells(vec_col: str, n_bits: int = 4):
