@@ -11,8 +11,7 @@ Usage:
   cd /tmp && spark-submit --master 'local[8]' --py-files /tmp/trustfuse_spark.zip \
       /root/repo/scripts/submit_job.py --entities 240000 --model crh --max-itr 3
 
-(run from OUTSIDE the repo so the zip is the only way to reach the package;
-`scripts/bench_scaling_submit.py` wraps this at two parallelism levels.)
+(run from OUTSIDE the repo so the zip is the only way to reach the package.)
 """
 
 from __future__ import annotations

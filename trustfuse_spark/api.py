@@ -34,6 +34,15 @@ from trustfuse_spark.sources.loaders import load_bucket_dir, load_tsv_bucket, wi
 
 
 def register_model(name: str, fn: Callable[..., FusionResult]) -> None:
+    """Make ``fn`` available as fusion model ``name``.
+
+    ``fn(claims, **params) -> FusionResult``. An iterative model keeps the
+    reference's prepare / iterate / finalize shape: prepare its tables, run
+    its lazy weight-then-truth step through
+    :func:`trustfuse_spark.operators.fusion.base.iterate` (which materializes
+    each step, frees old generations and applies the stop test), then build
+    the result from the final state.
+    """
     MODELS[name] = fn
 
 

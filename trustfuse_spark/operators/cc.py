@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from trustfuse_spark.operators.fusion.base import CheckpointRotator, checkpoint
+from trustfuse_spark.operators.fusion.base import checkpoint, iterate, settled
 
 # Largest edge list labelled on the driver: the largest measured size; with
 # string nodes it peaked at 1.26 GB of Python driver RSS.
@@ -150,21 +150,21 @@ def connected_components(
             )
         )
 
-    e = checkpoint(e.distinct())
-    rot = CheckpointRotator(edges.sparkSession)
-    prev_sig = None
-    for _ in range(max_rounds):
+    def star_round(e: DataFrame) -> DataFrame:
         e = _star_round(e, large=True, salt_hubs=salt_hubs)
-        e = rot.rotate(_star_round(e, large=False, salt_hubs=salt_hubs))
-        sig_row = e.agg(
+        return _star_round(e, large=False, salt_hubs=salt_hubs)
+
+    def signature(e: DataFrame) -> tuple:
+        row = e.agg(
             F.count("*").alias("n"),
             # order-insensitive, overflow-free edge-set signature (ANSI-safe)
             F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
         ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        return row["n"], row["h"]
+
+    e, _ = iterate(
+        checkpoint(e.distinct()), star_round, max_rounds, settled(signature)
+    )
 
     # converged edge list is (node -> root); isolated nodes are their own root
     roots = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))

@@ -7,8 +7,15 @@ whole loop in one grouped-map task (``groupBy("bucket_id").applyInPandas``,
 numpy inside) and keeps the distributed form below for buckets too large
 for one Python worker. The other models, and that fallback, are the
 distributed form: two alternating grouped aggregations iterated by a driver
-loop with broadcast weight joins and per-iteration lineage truncation
-(``CheckpointRotator``). No per-row Python anywhere in this module.
+loop with broadcast weight joins. No per-row Python anywhere in this module.
+
+One driver-loop skeleton, :func:`iterate`, runs every iterative operator
+(the fusion models, CRH's fallback, connected components' star rounds,
+``scale_units``, the graph loops). The operator supplies a lazy step and an
+optional stop test; the skeleton materializes each step through one
+:class:`CheckpointRotator` per table (lineage cut; all but the newest two
+generations freed). :func:`rel_l2_change`, :func:`max_abs_change` and
+:func:`settled` are the shared stop tests.
 
 Claims contract (long form):
     bucket_id:int, source:string, entity:string, attr:string,
@@ -22,9 +29,12 @@ crh.py:47/69/95 — declared-type branching is the explicit Spark equivalent).
 
 from __future__ import annotations
 
+import math
+import operator
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 FACT_KEYS = ["bucket_id", "entity", "attr"]
@@ -43,6 +53,14 @@ def split_claims(claims: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(categorical, numeric) claim partitions."""
     is_num = F.col("value_num").isNotNull()
     return claims.filter(~is_num), claims.filter(is_num)
+
+
+def value_key() -> Column:
+    """A claim's value as one string key: the number's string form for a
+    numeric claim, else value_str."""
+    return F.when(
+        F.col("value_num").isNotNull(), F.col("value_num").cast("string")
+    ).otherwise(F.col("value_str"))
 
 
 def drop_incomplete_claims(claims: DataFrame) -> DataFrame:
@@ -112,6 +130,7 @@ class CheckpointRotator:
     some loops' final lazy output still references the second-to-last
     checkpoint (e.g. TruthFinder's truth reads the scores built from the
     previous tau), so freeing only >=2-generations-old is the safe contract.
+    :func:`iterate` is the engine's only user.
     """
 
     _probe_warned = False  # class-level: warn once per process, not per loop
@@ -160,6 +179,74 @@ class CheckpointRotator:
         while len(self._gens) > self._keep:
             release_rdds(self._spark, self._gens.pop(0))
         return out
+
+
+def iterate(state, step, max_itr: int, stop=None):
+    """The driver loop: up to ``max_itr`` steps from ``state``.
+
+    ``state`` is a DataFrame or a tuple of DataFrames; a position may start
+    as None ("no estimate yet"). ``step`` is lazy: for a DataFrame state it
+    maps the state to the next one; for a tuple state it is one such
+    function per position, run in order, each seeing the positions before
+    it already advanced (the alternating weight/truth updates). Every table
+    a step returns goes through its position's own CheckpointRotator: one
+    ``rotate`` per table per step. ``stop(old, new)`` runs after every step
+    and ends the loop when true.
+
+    Returns ``(state, prev)``: the final state and the one before it (None
+    if no step ran); the rotators keep both materialized.
+    """
+    single = not isinstance(state, tuple)
+    tables = [state] if single else list(state)
+    updates = [step] if single else step
+    rotators = [CheckpointRotator(SparkSession.active()) for _ in tables]
+    prev = None
+    for _ in range(max_itr):
+        for i, update in enumerate(updates):
+            tables[i] = rotators[i].rotate(update(tables[0] if single else tuple(tables)))
+        prev, state = state, tables[0] if single else tuple(tables)
+        if stop is not None and stop(prev, state):
+            break
+    return state, prev
+
+
+def _with_old(old: DataFrame, new: DataFrame, keys: list[str], col: str) -> DataFrame:
+    return new.join(old.select(*keys, F.col(col).alias("__old")), keys)
+
+
+def rel_l2_change(old: DataFrame | None, new: DataFrame, keys: list[str], col: str) -> float:
+    """||new - old|| / ||old|| of ``col`` over the shared keys, one collected
+    scalar aggregation; inf without an old table or when it is all zero."""
+    if old is None:
+        return math.inf
+    row = _with_old(old, new, keys, col).agg(
+        F.sqrt(F.sum((F.col(col) - F.col("__old")) ** 2)).alias("num"),
+        F.sqrt(F.sum(F.col("__old") ** 2)).alias("den"),
+    ).collect()[0]
+    return row["num"] / row["den"] if row["den"] else math.inf
+
+
+def max_abs_change(old: DataFrame, new: DataFrame, keys: list[str], col: str) -> float:
+    """max |new - old| of ``col`` over the shared keys (one collected
+    scalar); inf when they share no key."""
+    d = _with_old(old, new, keys, col).agg(
+        F.max(F.abs(F.col(col) - F.col("__old")))
+    ).collect()[0][0]
+    return math.inf if d is None else d
+
+
+def settled(summary: Callable, same: Callable = operator.eq, first=None):
+    """Stop test on one driver-side summary per step: collects
+    ``summary(new)`` and stops when ``same(previous, current)``, previous
+    being the last step's summary (``first`` at the first step; None:
+    nothing to compare yet)."""
+    last = [first]
+
+    def stop(old, new) -> bool:
+        prev, last[0] = last[0], summary(new)
+        return prev is not None and same(prev, last[0])
+
+    return stop
 
 
 def _pick_per_fact(scored: DataFrame, order_key: Column) -> DataFrame:

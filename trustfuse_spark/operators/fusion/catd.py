@@ -40,9 +40,10 @@ from trustfuse_spark.operators.fusion.base import (
     WEIGHT_KEYS,
     FusionResult,
     assemble_truth,
-    CheckpointRotator,
     checkpoint,
+    iterate,
     median_per_fact,
+    rel_l2_change,
     snap_to_claimed,
 )
 
@@ -82,6 +83,8 @@ def fuse_catd(
     raw == 0 (-> weight 1e10). Float summation order across shuffles leaves
     ~1e-22 residue where numpy gets an exact 0; an explicit tolerance is the
     shuffle-stable equivalent (SURVEY §7.4 risk 1)."""
+    if max_itr < 1:
+        raise ValueError("max_itr must be >= 1")
     if numeric_only:
         claims = claims.filter(F.col("claim_type") == "quantity")
     claims = checkpoint(
@@ -96,51 +99,37 @@ def fuse_catd(
         .groupBy(*WEIGHT_KEYS)
         .agg(F.count("*").alias("cnt"))
     )
-    truth = median_per_fact(claims)  # lazy
-    rot = CheckpointRotator(claims.sparkSession)
-    weights = None
-    prev_w: DataFrame | None = None
-    for _ in range(max_itr):
-        raw = (
-            claims.join(truth, FACT_KEYS)
-            .groupBy(*WEIGHT_KEYS)
-            .agg(F.sum((F.col("value_num") - F.col("truth_num")) ** 2).alias("raw"))
-        )
-        weights = rot.rotate(
-            raw.join(counts, WEIGHT_KEYS)
-            .select(
-                *WEIGHT_KEYS,
-                F.when(
-                    F.col("raw") > zero_tol, chi2_cdf_0025(F.col("cnt")) / F.col("raw")
-                )
-                .otherwise(F.lit(1e10))
-                .alias("weight"),
-            )
-        )
-        # truth: per-fact weighted mean over broadcast weights
-        truth = (
+    init_truth = median_per_fact(claims)  # lazy
+
+    def truth_of(weights: DataFrame | None) -> DataFrame:
+        """Per-fact weighted mean over broadcast weights (median before the
+        first weights)."""
+        if weights is None:
+            return init_truth
+        return (
             claims.join(F.broadcast(weights), WEIGHT_KEYS)
             .groupBy(*FACT_KEYS)
             .agg((F.sum(F.col("weight") * F.col("value_num")) / F.sum("weight")).alias("truth_num"))
         )
-        if tol is not None:
-            if prev_w is not None:
-                err_row = (
-                    weights.join(
-                        prev_w.select(*WEIGHT_KEYS, F.col("weight").alias("w_old")),
-                        WEIGHT_KEYS,
-                    )
-                    .agg(
-                        F.sqrt(F.sum((F.col("weight") - F.col("w_old")) ** 2)).alias("num"),
-                        F.sqrt(F.sum(F.col("w_old") ** 2)).alias("den"),
-                    )
-                    .collect()[0]
-                )
-                if err_row["den"] and err_row["num"] / err_row["den"] <= tol:
-                    prev_w = weights
-                    break
-            prev_w = weights
 
-    assert weights is not None
-    num_truth = snap_to_claimed(claims, truth)
+    def step(weights: DataFrame | None) -> DataFrame:
+        raw = (
+            claims.join(truth_of(weights), FACT_KEYS)
+            .groupBy(*WEIGHT_KEYS)
+            .agg(F.sum((F.col("value_num") - F.col("truth_num")) ** 2).alias("raw"))
+        )
+        return raw.join(counts, WEIGHT_KEYS).select(
+            *WEIGHT_KEYS,
+            F.when(
+                F.col("raw") > zero_tol, chi2_cdf_0025(F.col("cnt")) / F.col("raw")
+            )
+            .otherwise(F.lit(1e10))
+            .alias("weight"),
+        )
+
+    def stop(old: DataFrame | None, new: DataFrame) -> bool:
+        return rel_l2_change(old, new, WEIGHT_KEYS, "weight") <= tol
+
+    weights, _ = iterate(None, step, max_itr, None if tol is None else stop)
+    num_truth = snap_to_claimed(claims, truth_of(weights))
     return FusionResult(truth=assemble_truth(None, num_truth), weights=weights)

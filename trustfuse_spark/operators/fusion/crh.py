@@ -56,12 +56,12 @@ from pyspark.sql import types as T
 from trustfuse_spark.operators.fusion.base import (
     FACT_KEYS,
     WEIGHT_KEYS,
-    CheckpointRotator,
     FusionResult,
     assemble_truth,
     checkpoint,
     drop_incomplete_claims,
     fact_stddev,
+    iterate,
     median_per_fact,
     mode_per_fact,
     split_claims,
@@ -362,17 +362,19 @@ def _fuse_distributed(claims: DataFrame, max_itr: int, eps: float) -> FusionResu
     all_sources = claims.select(*WEIGHT_KEYS).distinct()
     claims_flagged = _flag_claims(cat, num_with_denom)
 
-    cat_truth = mode_per_fact(cat)
-    num_truth = median_per_fact(num)
+    init_truth = (mode_per_fact(cat), median_per_fact(num))
 
-    rot = CheckpointRotator(claims.sparkSession)
-    weights = None
-    for _ in range(max_itr):
-        weights = rot.rotate(
-            _weight_step(claims_flagged, cat_truth, num_truth, all_sources)
-        )
-        cat_truth, num_truth = _truth_step(cat, num_with_denom, weights)
+    def truths(weights: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+        if weights is None:
+            return init_truth
+        return _truth_step(cat, num_with_denom, weights)
 
+    weights, _ = iterate(
+        None,
+        lambda w: _weight_step(claims_flagged, *truths(w), all_sources),
+        max_itr,
+    )
+    cat_truth, num_truth = truths(weights)
     if weights is None:  # max_itr == 0 -> init truth, uniform weights
         weights = all_sources.select(*WEIGHT_KEYS, F.lit(0.0).alias("weight"))
 

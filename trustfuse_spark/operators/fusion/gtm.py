@@ -33,8 +33,9 @@ from trustfuse_spark.operators.fusion.base import (
     WEIGHT_KEYS,
     FusionResult,
     assemble_truth,
-    CheckpointRotator,
     checkpoint,
+    iterate,
+    rel_l2_change,
     snap_to_claimed,
 )
 
@@ -93,17 +94,9 @@ def fuse_gtm(
             )
         )
 
-    # init: truth0 = prior (non-normalized), evaluated against normalized cn
-    truth = prior.select(*FACT_KEYS, F.col("prior").alias("truth"))
-    rot_s = CheckpointRotator(claims.sparkSession)
-    rot_t = CheckpointRotator(claims.sparkSession)
-    sigma2 = rot_s.rotate(maximization(truth))
-
-    prev_truth: DataFrame | None = None
-    for _ in range(max_itr):
-        bw = F.broadcast(sigma2)
-        truth = (
-            cn.join(bw, WEIGHT_KEYS)
+    def expectation(sigma2: DataFrame) -> DataFrame:
+        return (
+            cn.join(F.broadcast(sigma2), WEIGHT_KEYS)
             .groupBy(*FACT_KEYS)
             .agg(
                 (
@@ -112,26 +105,30 @@ def fuse_gtm(
                 ).alias("truth")
             )
         )
-        if tol is not None:
-            truth = rot_t.rotate(truth)
-        sigma2 = rot_s.rotate(maximization(truth))
-        if tol is not None and prev_truth is not None:
-            # ||Δtruth|| / ||truth_old|| as one scalar aggregation (never
-            # collect the per-fact table to the driver)
-            err_row = (
-                truth.join(
-                    prev_truth.select(*FACT_KEYS, F.col("truth").alias("t_old")),
-                    FACT_KEYS,
-                )
-                .agg(
-                    F.sqrt(F.sum((F.col("truth") - F.col("t_old")) ** 2)).alias("num"),
-                    F.sqrt(F.sum(F.col("t_old") ** 2)).alias("den"),
-                )
-                .collect()[0]
-            )
-            if err_row["den"] and err_row["num"] / err_row["den"] <= tol:
-                break
-        prev_truth = truth
+
+    # init: truth0 = prior (non-normalized), evaluated against normalized cn
+    truth = prior.select(*FACT_KEYS, F.col("prior").alias("truth"))
+    sigma2 = checkpoint(maximization(truth))
+    if tol is None:
+        # truth stays lazy; the final one is the E step of the previous sigma2
+        sigma2, prev = iterate(
+            sigma2, lambda s: maximization(expectation(s)), max_itr
+        )
+        if prev is not None:
+            truth = expectation(prev)
+    else:
+        # truth is materialized too: the stop test compares consecutive truths
+        # (||Δtruth|| / ||truth_old||; none against the prior)
+        def stop(old: tuple, new: tuple) -> bool:
+            return rel_l2_change(old[0], new[0], FACT_KEYS, "truth") <= tol
+
+        (last, sigma2), _ = iterate(
+            (None, sigma2),
+            (lambda st: expectation(st[1]), lambda st: maximization(st[0])),
+            max_itr,
+            stop,
+        )
+        truth = truth if last is None else last
 
     rescaled = (
         truth.join(prior, FACT_KEYS)

@@ -37,8 +37,9 @@ from trustfuse_spark.operators.fusion.base import (
     FusionResult,
     argmax_per_fact,
     assemble_truth,
-    CheckpointRotator,
     checkpoint,
+    iterate,
+    settled,
 )
 
 _NORM_SCHEMA = T.StructType(
@@ -142,6 +143,8 @@ def fuse_kdem(
     h: float = -1.0,
     numeric_only: bool = True,
 ) -> FusionResult:
+    if max_itr < 1:
+        raise ValueError("max_itr must be >= 1")
     if numeric_only:
         claims = claims.filter(F.col("claim_type") == "quantity")
     base = checkpoint(
@@ -175,26 +178,50 @@ def fuse_kdem(
     )  # init uniform per fact
     compute_norms = _norms_factory(h, method.lower())
 
-    prev_j: dict[int, float] | None = None
-    rot_n = CheckpointRotator(claims.sparkSession)
-    rot_c = CheckpointRotator(claims.sparkSession)
-    c_vec = None
     # fact-hash bucket count scales with cores, not |facts| (see
     # _norms_factory); xxhash64 keeps co-fact rows in one pandas batch
     n_fb = max(claims.sparkSession.sparkContext.defaultParallelism * 4, 8)
     fb = F.pmod(F.xxhash64("entity", "attr"), F.lit(n_fb))
-    for _ in range(max_itr):
-        norms = rot_n.rotate(
-            weighted.withColumn("__fb", fb)
+
+    def objective(norms: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(rtn per source, j = Σ rtn per bucket)."""
+        rtn = norms.groupBy(*WEIGHT_KEYS).agg(
+            F.sum(F.col("norm") / F.col("flen")).alias("rtn")
+        )
+        return rtn, rtn.groupBy("bucket_id").agg(F.sum("rtn").alias("j"))
+
+    def weighted_of(state: tuple) -> DataFrame:
+        """Per-claim weights: uniform per fact before the first c update,
+        then (reference update_w) c masked to norm > 0 and normalized within
+        the fact; all-masked -> uniform over norm == 0 entries."""
+        norms, c_vec = state
+        if c_vec is None:
+            return weighted
+        masked = norms.join(F.broadcast(c_vec), WEIGHT_KEYS).withColumn(
+            "wi", F.when(F.col("norm") > 0, F.col("c")).otherwise(F.lit(0.0))
+        )
+        fact_sum = F.sum("wi").over(flen)
+        fallback = F.when(F.col("norm") == 0, F.lit(1.0)).otherwise(F.lit(0.0))
+        fb_sum = F.sum(fallback).over(flen)
+        return masked.select(
+            *FACT_KEYS,
+            "source",
+            "value_num",
+            F.when(fact_sum > 0, F.col("wi") / fact_sum)
+            .otherwise(fallback / fb_sum)
+            .alias("w"),
+        )
+
+    def norms_step(state: tuple) -> DataFrame:
+        return (
+            weighted_of(state).withColumn("__fb", fb)
             .groupBy("bucket_id", "__fb")
             .applyInPandas(compute_norms, _NORM_SCHEMA)
         )
-        rtn = (
-            norms.groupBy(*WEIGHT_KEYS)
-            .agg(F.sum(F.col("norm") / F.col("flen")).alias("rtn"))
-        )
-        jdf = rtn.groupBy("bucket_id").agg(F.sum("rtn").alias("j"))
-        c_vec = (
+
+    def c_step(state: tuple) -> DataFrame:
+        rtn, jdf = objective(state[0])
+        return (
             rtn.join(jdf, "bucket_id")
             .join(counts, WEIGHT_KEYS)
             .select(
@@ -207,40 +234,25 @@ def fuse_kdem(
                 .alias("c"),
             )
         )
-        c_vec = rot_c.rotate(c_vec)
-        cur_j = {r["bucket_id"]: r["j"] for r in jdf.collect()}
-        # w update: mask to norm>0, normalize within fact; all-masked ->
-        # uniform over norm==0 entries (reference update_w)
-        masked = norms.join(F.broadcast(c_vec), WEIGHT_KEYS).withColumn(
-            "wi", F.when(F.col("norm") > 0, F.col("c")).otherwise(F.lit(0.0))
-        )
-        fact_sum = F.sum("wi").over(flen)
-        fallback = F.when(F.col("norm") == 0, F.lit(1.0)).otherwise(F.lit(0.0))
-        fb_sum = F.sum(fallback).over(flen)
-        weighted = masked.select(
-            *FACT_KEYS,
-            "source",
-            "value_num",
-            F.when(fact_sum > 0, F.col("wi") / fact_sum)
-            .otherwise(fallback / fb_sum)
-            .alias("w"),
-        )
-        if prev_j is not None:
-            errs = [
-                abs((cur_j[b] - prev_j[b]) / prev_j[b])
-                for b in cur_j
-                if b in prev_j and prev_j[b]
-            ]
-            if errs and max(errs) <= tol:
-                prev_j = cur_j
-                break
-        prev_j = cur_j
 
-    assert c_vec is not None, "max_itr must be >= 1"
+    def bucket_j(state: tuple) -> dict:
+        return {r["bucket_id"]: r["j"] for r in objective(state[0])[1].collect()}
+
+    def converged(prev_j: dict, cur_j: dict) -> bool:  # |Δj / j| <= tol
+        errs = [
+            abs((cur_j[b] - prev_j[b]) / prev_j[b])
+            for b in cur_j
+            if b in prev_j and prev_j[b]
+        ]
+        return bool(errs) and max(errs) <= tol
+
+    state, _ = iterate(
+        (None, None), (norms_step, c_step), max_itr, settled(bucket_j, converged)
+    )
     final = argmax_per_fact(
-        weighted.withColumn("vkey", F.col("value_num")), F.col("w"), "vkey"
+        weighted_of(state).withColumn("vkey", F.col("value_num")), F.col("w"), "vkey"
     ).select(*FACT_KEYS, F.col("value_num").alias("truth_num"))
     return FusionResult(
         truth=assemble_truth(None, final),
-        weights=c_vec.select(*WEIGHT_KEYS, F.col("c").alias("weight")),
+        weights=state[1].select(*WEIGHT_KEYS, F.col("c").alias("weight")),
     )

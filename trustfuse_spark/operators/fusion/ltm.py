@@ -42,6 +42,7 @@ from trustfuse_spark.operators.fusion.base import (
     FACT_KEYS,
     WEIGHT_KEYS,
     FusionResult,
+    value_key,
 )
 
 _POST_SCHEMA = T.StructType(
@@ -61,11 +62,8 @@ BETA = {"1": 10.0, "0": 10.0}
 def binary_claims(claims: DataFrame) -> DataFrame:
     """Explicit '1' claims + implicit '0' claims (source touched the entity
     for this attr but did not state this value)."""
-    vkey = F.when(
-        F.col("value_num").isNotNull(), F.col("value_num").cast("string")
-    ).otherwise(F.col("value_str"))
     stated = (
-        claims.withColumn("vkey", vkey)
+        claims.withColumn("vkey", value_key())
         .select(*FACT_KEYS, "source", "vkey", "value_str", "value_num")
         .distinct()
     )
@@ -214,12 +212,7 @@ def fuse_ltm(
     # truth: values with posterior >= threshold (multi-valued; join back the
     # typed value columns)
     vals = (
-        claims.withColumn(
-            "vkey",
-            F.when(F.col("value_num").isNotNull(), F.col("value_num").cast("string")).otherwise(
-                F.col("value_str")
-            ),
-        )
+        claims.withColumn("vkey", value_key())
         .select(*FACT_KEYS, "vkey", "value_str", "value_num")
         .distinct()
     )

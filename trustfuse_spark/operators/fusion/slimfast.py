@@ -33,17 +33,17 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trustfuse_spark.operators.fusion.accu import one_claim_per_source, vote
 from trustfuse_spark.operators.fusion.base import (
     FACT_KEYS,
     WEIGHT_KEYS,
     FusionResult,
-    argmax_per_fact,
-    CheckpointRotator,
     checkpoint,
+    iterate,
 )
 
 _W_SCHEMA = T.StructType(
@@ -52,6 +52,13 @@ _W_SCHEMA = T.StructType(
         T.StructField("w_shared", T.DoubleType()),
     ]
 )
+
+
+def _accuracy() -> F.Column:
+    """Every source's accuracy: sigmoid of the shared weight, clamped at
+    exactly 1.0 / 0.0 to 0.99 / 0.01."""
+    a = 1.0 / (1.0 + F.exp(-F.col("w_shared")))
+    return F.when(a >= 1.0, 0.99).when(a <= 0.0, 0.01).otherwise(a)
 
 
 def _sgd_factory(alpha: float, reg: float):
@@ -79,79 +86,43 @@ def fuse_slimfast(
     reg: float = 0.01,
     init_accuracy: float = 0.8,
 ) -> FusionResult:
-    vkey = F.when(
-        F.col("value_num").isNotNull(), F.col("value_num").cast("string")
-    ).otherwise(F.col("value_str"))
+    if max_itr < 1:
+        raise ValueError("max_itr must be >= 1")
     # one claim per (source, fact), smallest value pinned (dict-overwrite twin)
-    w_dedup = Window.partitionBy(*FACT_KEYS, "source").orderBy("vkey")
-    prepared = checkpoint(
-        claims.withColumn("vkey", vkey)
-        .withColumn("__rn", F.row_number().over(w_dedup))
-        .filter(F.col("__rn") == 1)
-        .select(*FACT_KEYS, "source", "vkey", "value_str", "value_num")
-    )
-    n_distinct = prepared.groupBy(*FACT_KEYS).agg(
-        F.countDistinct("vkey").alias("n_vals")
-    )
-    claims_n = prepared.join(n_distinct, FACT_KEYS)
+    prepared, claims_n = one_claim_per_source(claims)
     buckets = prepared.select("bucket_id").distinct()
-    rot = CheckpointRotator(claims.sparkSession)
-    shared_w = rot.rotate(
-        buckets.withColumn(
-            "w_shared", F.lit(-math.log(1.0 / init_accuracy - 1.0))
-        )
-    )
     sgd = _sgd_factory(alpha, reg)
 
-    truth = None
-    for _ in range(max_itr):
-        a = 1.0 / (1.0 + F.exp(-F.col("w_shared")))
-        a = F.when(a >= 1.0, 0.99).when(a <= 0.0, 0.01).otherwise(a)
-        scored = (
-            claims_n.join(F.broadcast(shared_w), "bucket_id")
-            .withColumn("a", a)
-            .groupBy(*FACT_KEYS, "vkey", "n_vals")
-            .agg(
-                F.sum(F.log((F.col("n_vals") - 1) * F.col("a") / (1 - F.col("a")))).alias("score_sum"),
-                F.first("value_str").alias("value_str"),
-                F.first("value_num").alias("value_num"),
-            )
-            .withColumn(
-                "score",
-                F.when(F.col("n_vals") == 1, F.lit(1.0)).otherwise(F.col("score_sum")),
-            )
+    def truth_of(shared_w: DataFrame) -> DataFrame:
+        claims_w = claims_n.join(F.broadcast(shared_w), "bucket_id").withColumn(
+            "a", _accuracy()
         )
-        truth = argmax_per_fact(scored, F.col("score"), "vkey").select(
-            *FACT_KEYS, F.col("vkey").alias("t_vkey"), "value_str", "value_num"
-        )
-        correct = prepared.join(truth.select(*FACT_KEYS, "t_vkey"), FACT_KEYS).withColumn(
-            "correct", F.col("vkey") == F.col("t_vkey")
-        )
-        shared_w = rot.rotate(
+        return vote(claims_w, F.col("a"))
+
+    def step(shared_w: DataFrame) -> DataFrame:
+        correct = prepared.join(
+            truth_of(shared_w).select(*FACT_KEYS, F.col("vkey").alias("t_vkey")), FACT_KEYS
+        ).withColumn("correct", F.col("vkey") == F.col("t_vkey"))
+        return (
             correct.join(F.broadcast(shared_w), "bucket_id")
             .select("bucket_id", "entity", "attr", "vkey", "source", "correct", "w_shared")
             .groupBy("bucket_id")
             .applyInPandas(sgd, _W_SCHEMA)
         )
 
-    assert truth is not None, "max_itr must be >= 1"
+    init_w = buckets.withColumn("w_shared", F.lit(-math.log(1.0 / init_accuracy - 1.0)))
+    shared_w, prev = iterate(checkpoint(init_w), step, max_itr)
+    truth = truth_of(prev)  # the vote that produced the final shared weight
     out_truth = truth.select(
         *FACT_KEYS,
         "value_str",
         "value_num",
         F.col("value_num").isNotNull().alias("is_numeric"),
     )
-    final_a = 1.0 / (1.0 + F.exp(-F.col("w_shared")))
     weights = (
         prepared.select(*WEIGHT_KEYS)
         .distinct()
         .join(F.broadcast(shared_w), "bucket_id")
-        .select(
-            *WEIGHT_KEYS,
-            F.when(final_a >= 1.0, 0.99)
-            .when(final_a <= 0.0, 0.01)
-            .otherwise(final_a)
-            .alias("weight"),
-        )
+        .select(*WEIGHT_KEYS, _accuracy().alias("weight"))
     )
     return FusionResult(truth=out_truth, weights=weights)

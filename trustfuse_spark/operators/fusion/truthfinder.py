@@ -37,8 +37,9 @@ from trustfuse_spark.operators.fusion.base import (
     WEIGHT_KEYS,
     FusionResult,
     argmax_per_fact,
-    CheckpointRotator,
     checkpoint,
+    iterate,
+    value_key,
 )
 
 
@@ -131,23 +132,21 @@ def fuse_truthfinder(
     gamma: float = 0.3,
     theta: float = 0.0,
 ) -> FusionResult:
+    if max_itr < 1:
+        raise ValueError("max_itr must be >= 1")
     branch = (
         F.when(F.col("claim_type").isin("string", "entity"), F.lit("jaro"))
         .when(F.col("claim_type") == "quantity", F.lit("qty"))
         .otherwise(F.lit("none"))
     )
-    vkey = F.when(
-        F.col("value_num").isNotNull(), F.col("value_num").cast("string")
-    ).otherwise(F.col("value_str"))
     # Severed + materialized once (see fuse_crh note on cache vs checkpoint).
     prepared = checkpoint(
         claims.select(*FACT_KEYS, "source", "value_str", "value_num", "claim_type")
         .withColumn("branch", branch)
-        .withColumn("vkey", vkey)
+        .withColumn("vkey", value_key())
     )
 
-    rot = CheckpointRotator(claims.sparkSession)
-    tau = rot.rotate(
+    tau = checkpoint(
         prepared.select(*WEIGHT_KEYS)
         .distinct()
         .withColumn("tau", F.lit(-math.log(1 - 0.9)))
@@ -157,19 +156,17 @@ def fuse_truthfinder(
     # it once, outside the loop (never rotated — every iteration reads it).
     pairs = checkpoint(_static_pairs(prepared))
 
-    # Per iteration only the tiny tau table is materialized; claim scores
-    # stay lazy (constant-depth lineage over cached claims + checkpointed
-    # tau/pairs) — one job per iteration.
-    scores = None
-    for _ in range(max_itr):
+    def scores_of(tau: DataFrame) -> DataFrame:
         claims_w = prepared.join(F.broadcast(tau), WEIGHT_KEYS)
-        scores = _tmp_scores(_sigma(claims_w), pairs, rho, theta).withColumn(
+        return _tmp_scores(_sigma(claims_w), pairs, rho, theta).withColumn(
             "s", 1.0 / (1.0 + F.exp(-gamma * F.col("tmp")))
         )
+
+    def step(tau: DataFrame) -> DataFrame:
         per_claim = prepared.join(
-            scores.select(*FACT_KEYS, "vkey", "s"), [*FACT_KEYS, "vkey"]
+            scores_of(tau).select(*FACT_KEYS, "vkey", "s"), [*FACT_KEYS, "vkey"]
         )
-        tau = rot.rotate(
+        return (
             per_claim.groupBy(*WEIGHT_KEYS)
             .agg(F.avg("s").alias("t"))
             .select(
@@ -180,8 +177,12 @@ def fuse_truthfinder(
             )
         )
 
-    assert scores is not None, "max_itr must be >= 1"
-    truth = argmax_per_fact(scores, F.col("s"), "vkey").select(
+    # Per iteration only the tiny tau table is materialized; claim scores
+    # stay lazy (constant-depth lineage over cached claims + checkpointed
+    # tau/pairs) — one job per iteration.
+    tau, prev = iterate(tau, step, max_itr)
+    # the final truth reads the scores that produced the final tau
+    truth = argmax_per_fact(scores_of(prev), F.col("s"), "vkey").select(
         *FACT_KEYS,
         "value_str",
         "value_num",

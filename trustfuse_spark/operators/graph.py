@@ -26,6 +26,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trustfuse_spark.operators.fusion.base import iterate, settled
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The undirected simple graph under ``edges``: (a, b) with a < b, no
+    self-loops, no duplicates."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame, name: str) -> DataFrame:
+    """(node, ``name``): each node's degree in an undirected (a, b) list."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .unionByName(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias(name))
+    )
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    """(node): every endpoint of the edge list, once."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
 
 def triples_to_edges(triples: DataFrame) -> DataFrame:
     """(subj, pred, obj[, bucket_id]) -> edge list (src, dst, pred, ...).
@@ -104,19 +137,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     Returns (node, triangles, lcc) with lcc = 2*T / (deg*(deg-1)), 0.0
     when deg < 2.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    und = _undirected(edges)
+    deg = _degrees(und, "deg")
     # attach both endpoint degrees, orient low-(deg,node) -> high
     w = (
         und.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
@@ -179,28 +201,18 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     (|V|-row, 2-col) label table — key-partitioned, AQE-skew-splittable —
     and ONE hash aggregate producing the argmax via max(struct(count,
     label)) — no window, no sort, map-side partials. The label table is
-    localCheckpoint-rotated so lineage stays bounded, same as pagerank.
+    materialized every iteration by ``fusion.base.iterate``, so lineage
+    stays bounded and only the newest two tables hold blocks.
 
     Returns (node, label).
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges)
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iterations):
+    nodes = _nodes(edges).localCheckpoint(eager=True)
+
+    def step(labels: DataFrame) -> DataFrame:
         nl = (
             adj.join(
                 labels.select(F.col("node").alias("nbr"), "label"), "nbr"
@@ -215,14 +227,14 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
             )
             .select("node", F.col("m.l").alias("new_label"))
         )
-        labels = (
-            labels.join(nl, "node", "left")
-            .select(
-                "node",
-                F.coalesce("new_label", "label").alias("label"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(nl, "node", "left").select(
+            "node",
+            F.coalesce("new_label", "label").alias("label"),
         )
+
+    labels, _ = iterate(
+        nodes.select("node", F.col("node").alias("label")), step, iterations
+    )
     return labels
 
 
@@ -242,19 +254,17 @@ def pagerank(
     dst (contributions) plus a key-partitioned join against the static
     out-degree table; the dangling-mass term and the node count are scalar
     aggregates riding as broadcast 1-row cross joins, never driver
-    collects. The rank vector (|V| rows, 2 columns) is localCheckpoint-ed
-    every ``checkpoint_every`` iterations so the lineage (and the replay
-    cost of a lost executor) stays bounded — the same rotation the fusion
-    models use (fusion/crh.py).
+    collects. The rank vector (|V| rows, 2 columns) is materialized every
+    ``checkpoint_every`` iterations, as one ``fusion.base.iterate`` step,
+    so the lineage (and the replay cost of a lost executor) stays bounded
+    and only the newest two cuts hold blocks.
 
     Returns (node, rank); ranks sum to 1 exactly up to float error.
     """
+    if checkpoint_every < 1:
+        raise ValueError("checkpoint_every must be >= 1")
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(e)
     out_deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("out_deg")
     )
@@ -266,7 +276,7 @@ def pagerank(
         F.broadcast(n_nodes)
     ).select("node", "out_deg", (F.lit(1.0) / F.col("n")).alias("rank"))
 
-    for it in range(iterations):
+    def step(ranks: DataFrame) -> DataFrame:
         dangling = ranks.filter(F.col("out_deg").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
         )
@@ -279,7 +289,7 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("in_rank"))
         )
-        ranks = (
+        return (
             base.join(contrib, "node", "left")
             .crossJoin(F.broadcast(n_nodes))
             .crossJoin(F.broadcast(dangling))
@@ -296,9 +306,17 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank")
+
+    def advance(ranks: DataFrame, n: int) -> DataFrame:
+        for _ in range(n):
+            ranks = step(ranks)
+        return ranks
+
+    # the lineage cut falls after every checkpoint_every-th iteration but
+    # the last, which stays lazy
+    cuts = max(iterations - 1, 0) // checkpoint_every
+    ranks, _ = iterate(ranks, lambda r: advance(r, checkpoint_every), cuts)
+    return advance(ranks, iterations - cuts * checkpoint_every).select("node", "rank")
 
 
 def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 30) -> DataFrame:
@@ -311,8 +329,9 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 30) -> DataFrame:
     Scale shape per round: ONE hash aggregate (degrees over the surviving
     edge set) and TWO broadcast-or-shuffle left_semi joins filtering the
     edge list on survivor endpoints — no windows, no per-row Python. The
-    surviving edge set is localCheckpoint-rotated so lineage stays bounded
-    across rounds. Convergence is a scalar count per round (the same
+    surviving edge set is materialized every round by
+    ``fusion.base.iterate`` so lineage stays bounded across rounds.
+    Convergence is a scalar count per round (the same
     driver-side convergence-scalar pattern the fusion loops use); rounds
     are bounded by ``max_rounds`` — peel depth on real power-law graphs is
     tens of rounds, and each round strictly shrinks the graph, so late
@@ -321,40 +340,22 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 30) -> DataFrame:
     Returns (node, core_deg): the nodes of the k-core with their degree
     inside the core (>= k by construction). Empty when no k-core exists.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = und.count()
-    for _ in range(max_rounds):
-        deg = (
-            und.select(F.col("a").alias("node"))
-            .unionByName(und.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+    und = _undirected(edges).localCheckpoint(eager=True)
+
+    def peel(und: DataFrame) -> DataFrame:
+        deg = _degrees(und, "deg")
         keep = deg.filter(F.col("deg") >= k).select("node")
-        und = (
+        return (
             und.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        # convergence scalar: the peel reached fixpoint when no edge dropped
-        n_next = und.count()
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-    return (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("core_deg"))
+
+    # convergence scalar: the peel reached fixpoint when no edge dropped
+    und, _ = iterate(
+        und, peel, max_rounds, settled(lambda u: u.count(), first=und.count())
     )
+    return _degrees(und, "core_deg")
 
 
 def link_prediction(
@@ -384,13 +385,7 @@ def link_prediction(
     Returns (node_a, node_b, common_neighbors, adamic_adar) with
     node_a < node_b; adamic_adar rounded to 6 dp (sum-order float noise).
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges)
     adj = und.select(F.col("a").alias("w"), F.col("b").alias("x")).unionByName(
         und.select(F.col("b").alias("w"), F.col("a").alias("x"))
     )
@@ -439,54 +434,62 @@ def hits(
     Per iteration: TWO key-partitioned join+agg pairs (contributions keyed
     by dst then by src — the same shape as one pagerank step each) and two
     1-row normalizer aggregates riding as broadcast cross joins. The score
-    vector is localCheckpoint-rotated every ``checkpoint_every`` iterations
-    (the fusion-loop convention) so lineage stays bounded.
+    vectors are materialized every ``checkpoint_every`` iterations, as one
+    ``fusion.base.iterate`` step, so lineage stays bounded.
 
     Returns (node, hub, auth) for EVERY node in the edge universe — sinks
     carry hub 0, sources auth 0.
     """
+    if iterations < 1:
+        raise ValueError("iterations must be >= 1")
+    if checkpoint_every < 1:
+        raise ValueError("checkpoint_every must be >= 1")
     e = edges.select("src", "dst")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes = _nodes(e).localCheckpoint(eager=True)
+
+    def advance(hub: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
+        for _ in range(n):
+            a = (
+                e.join(hub.select(F.col("node").alias("src"), "hub"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("hub").alias("s"))
+            )
+            za = a.agg(F.sum("s").alias("z"))
+            auth = (
+                nodes.join(a, "node", "left")
+                .crossJoin(F.broadcast(za))
+                .select(
+                    "node",
+                    (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("z")).alias("auth"),
+                )
+            )
+            h = (
+                e.join(auth.select(F.col("node").alias("dst"), "auth"), "dst")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("auth").alias("s"))
+            )
+            zh = h.agg(F.sum("s").alias("z"))
+            hub = (
+                nodes.join(h, "node", "left")
+                .crossJoin(F.broadcast(zh))
+                .select(
+                    "node",
+                    (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("z")).alias("hub"),
+                )
+            )
+        return auth, hub
+
+    # the lineage cut falls after every checkpoint_every-th iteration but
+    # the last; both vectors are materialized there, each from the hub of
+    # the previous cut
+    k = checkpoint_every
+    cuts = (iterations - 1) // k
+    (_, hub), _ = iterate(
+        (None, nodes.select("node", F.lit(1.0).alias("hub"))),
+        (lambda st: advance(st[1], k)[0], lambda st: advance(st[1], k)[1]),
+        cuts,
     )
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for it in range(iterations):
-        a = (
-            e.join(hub.select(F.col("node").alias("src"), "hub"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("s"))
-        )
-        za = a.agg(F.sum("s").alias("z"))
-        auth = (
-            nodes.join(a, "node", "left")
-            .crossJoin(F.broadcast(za))
-            .select(
-                "node",
-                (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("z")).alias("auth"),
-            )
-        )
-        h = (
-            e.join(auth.select(F.col("node").alias("dst"), "auth"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("s"))
-        )
-        zh = h.agg(F.sum("s").alias("z"))
-        hub = (
-            nodes.join(h, "node", "left")
-            .crossJoin(F.broadcast(zh))
-            .select(
-                "node",
-                (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("z")).alias("hub"),
-            )
-        )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            hub = hub.localCheckpoint(eager=True)
-            auth = auth.localCheckpoint(eager=True)
-    assert auth is not None, "iterations must be >= 1"
+    auth, hub = advance(hub, iterations - cuts * k)
     return nodes.join(hub, "node").join(auth, "node").select("node", "hub", "auth")
 
 
@@ -507,9 +510,9 @@ def shortest_paths(
     the edge list on the source endpoint (AQE broadcasts the frontier while
     it is small) and ONE map-side-combined min agg — the dataflow min-plus
     recurrence, no windows, no per-row Python. Distance tables are
-    localCheckpoint-rotated so lineage stays bounded, matching `k_core` /
-    `pagerank`. Early-exits when a round relaxes nothing (convergence
-    scalar, the fusion-loop convention).
+    materialized every round by ``fusion.base.iterate`` so lineage stays
+    bounded, matching `k_core` / `pagerank`. Early-exits when a round
+    relaxes nothing (convergence scalar, the fusion-loop convention).
 
     ``sources`` is a (node) DataFrame. Returns (node, dist) for reached
     nodes. Integer-valued weights keep every path sum exact in double, so
@@ -518,26 +521,24 @@ def shortest_paths(
     dist = sources.select(
         F.col("node"), F.lit(0.0).alias("dist")
     ).localCheckpoint(eager=True)
-    for _ in range(rounds):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (
             dist.join(edges, dist.node == edges.src)
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col(weight_col)).alias("dist"))
         )
-        new = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    def none_relaxed(old: DataFrame, new: DataFrame) -> bool:
         # convergence scalar: count of (node, dist) pairs that changed
         changed = (
-            new.join(dist.withColumnRenamed("dist", "old"), "node", "left")
+            new.join(old.withColumnRenamed("dist", "old"), "node", "left")
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .count()
         )
-        dist = new
-        if changed == 0:
-            break
+        return changed == 0
+
+    dist, _ = iterate(dist, relax, rounds, none_relaxed)
     return dist
 
 

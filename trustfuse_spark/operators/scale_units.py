@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trustfuse_spark.operators.fusion.base import FACT_KEYS, CheckpointRotator, checkpoint
+from trustfuse_spark.operators.fusion.base import FACT_KEYS, iterate
 
 
 def scale_units(
@@ -32,8 +32,9 @@ def scale_units(
     unit scale. Non-numeric/zero rows pass through unchanged."""
     scalable = F.col(value_col).isNotNull() & (F.col(value_col) != 0)
     out = claims.withColumn("__scaled", F.when(scalable, F.col(value_col)))
-    rot = CheckpointRotator(claims.sparkSession)
-    for _ in range(max_itr):
+
+    def step(out: DataFrame) -> DataFrame:
+        out = out.drop("__moved")  # absent on the first step
         med = (
             out.filter(F.col("__scaled").isNotNull())
             .groupBy(*FACT_KEYS)
@@ -50,11 +51,13 @@ def scale_units(
             (pf < lower_factor) | (pf > upper_factor), F.lit(1)
         ).otherwise(F.lit(0))
         stepped = joined.withColumn("__moved", moved).withColumn("__scaled", adjusted)
-        stepped = rot.rotate(stepped.drop("__med"))
-        n_moved = stepped.agg(F.sum("__moved")).collect()[0][0] or 0
-        out = stepped.drop("__moved")
-        if n_moved == 0:
-            break
+        return stepped.drop("__med")
+
+    def none_moved(old: DataFrame, new: DataFrame) -> bool:
+        return (new.agg(F.sum("__moved")).collect()[0][0] or 0) == 0
+
+    out, _ = iterate(out, step, max_itr, none_moved)
+    out = out.drop("__moved")
     return out.withColumn(
         value_col, F.when(scalable, F.col("__scaled")).otherwise(F.col(value_col))
     ).drop("__scaled")
