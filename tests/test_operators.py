@@ -482,7 +482,7 @@ def test_checkpoint_rotator_precise_attribution(spark):
         persistent_rdd_ids,
     )
 
-    rot = CheckpointRotator(spark, keep=1)
+    rot = CheckpointRotator(keep=1)
     bystander = spark.range(500).withColumn("x", F.col("id") * 2).cache()
     g1 = rot.rotate(spark.range(100).withColumn("w", F.lit(1.0)))
     # bystander materializes BETWEEN rotations — a global diff would lump

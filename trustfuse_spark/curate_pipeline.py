@@ -60,11 +60,12 @@ def main(argv: list[str] | None = None) -> int:
             near_duplicates_minhash,
             neardup_drop_ids,
         )
+        from trustfuse_spark.operators.fusion.base import cache
 
         pairs = near_duplicates_minhash(
             docs, args.id_col, args.text_col, threshold=args.neardup_threshold
         )
-        drop_ids = neardup_drop_ids(pairs).cache()
+        drop_ids = cache(neardup_drop_ids(pairs))
         n_neardup = drop_ids.count()
 
     # sampling draw: xxhash64 (corpus-scale path); the portable polyfold

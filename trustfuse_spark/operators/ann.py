@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from trustfuse_spark.operators.fusion.base import checkpoint
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -158,7 +160,7 @@ def train_centroids(
         n = vectors.count()
         if n > sample_rows:
             v = v.sample(fraction=min(1.0, sample_rows / n), seed=7)
-            v = v.localCheckpoint(eager=True)
+            v = checkpoint(v)
     seeds = (
         v.withColumn("__h", F.xxhash64(F.col("v").cast("string")))
         .orderBy("__h")

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from trustfuse_spark.operators.fusion.base import checkpoint, iterate, settled
+from trustfuse_spark.operators.fusion.base import checkpoint, iterate, release, settled
 
 # Largest edge list labelled on the driver: the largest measured size; with
 # string nodes it peaked at 1.26 GB of Python driver RSS.
@@ -139,6 +139,7 @@ def connected_components(
 
     head = e.limit(LOCAL_MAX_EDGES + 1).toPandas()
     if len(head) <= LOCAL_MAX_EDGES:
+        release(e)  # the driver has every edge it needs
         node, comp = _label_components(head["src"].to_numpy(), head["dst"].to_numpy())
         node_type = all_nodes.schema["node"].dataType
         return F.broadcast(

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trustfuse_spark.operators.dedup import _fan_out
+from trustfuse_spark.operators.fusion.base import cache, checkpoint
 
 _POLY_M31 = (1 << 31) - 1
 
@@ -659,7 +660,7 @@ def pack_sequences(
     # so at corpus scale this is the standard "materialize the work list"
     # move; the chunked path below re-scans it twice more (summaries + pack)
     # for free.
-    sel = sel.localCheckpoint(eager=False)  # lazy: the count job materializes it
+    sel = checkpoint(sel, eager=False)  # lazy: the count job materializes it
 
     # plan-choice scalar (like ANN's centroid collect): biggest shard decides
     # whether the chunked machinery is needed at all
@@ -688,7 +689,7 @@ def pack_sequences(
         # it each would re-run the row_number window's shuffle+sort —
         # measured ~40% on the 7.1M-doc curation matrix (r5 0.706-efficiency
         # artifact). The n_chunks job below materializes it.
-        sel = sel.localCheckpoint(eager=False)
+        sel = checkpoint(sel, eager=False)
         big = sel.groupBy("grp").agg((F.max("chunk") + 1).alias("n_chunks"))
 
         sum_schema = (
@@ -1269,14 +1270,14 @@ def dsir_select(
             F.col("__logw")
             - F.log(-F.log(F.greatest(u, F.lit(1e-9)))),
         )
-        # one small row per doc; both the top-k and the mark join read it —
-        # without this the featurize+score chain re-runs per consumer.
-        # cache(), not lazy localCheckpoint: under AQE a lazy checkpoint
-        # still executes every upstream stage at plan-BUILD time, turning
-        # the chain into sequential construction jobs; cache defers to the
-        # first action, where independent stages run concurrently
-        .cache()
     )
+    # one small row per doc; both the top-k and the mark join read it —
+    # without this the featurize+score chain re-runs per consumer.
+    # cache(), not lazy localCheckpoint: under AQE a lazy checkpoint
+    # still executes every upstream stage at plan-BUILD time, turning
+    # the chain into sequential construction jobs; cache defers to the
+    # first action, where independent stages run concurrently
+    ranked = cache(ranked)
     top = (
         ranked.orderBy(F.col("__g").desc(), F.col("__id").asc())
         .limit(k)

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from trustfuse_spark.operators.fusion.base import cache
+
 
 def _fan_out(df: DataFrame) -> DataFrame:
     """Row-explosion stages need map-side parallelism: one dense input split
@@ -278,7 +280,7 @@ def near_duplicates_minhash(
         full corpus shingle table.
     """
     raw = shingles(df, id_col, text_col, n, distinct=False)
-    sigs = minhash_signatures(raw, num_hashes).cache()
+    sigs = cache(minhash_signatures(raw, num_hashes))
     cand = lsh_candidate_pairs(sigs, bands, num_hashes // bands)
     if sig_prefilter:
         # Signature-agreement prefilter — PROBABILISTIC, not lossless: the
@@ -305,7 +307,7 @@ def near_duplicates_minhash(
             .filter(matches >= F.lit(cutoff * num_hashes))
             .select("id_a", "id_b")
         )
-    pairs = cand.cache()
+    pairs = cache(cand)
     cand_ids = pairs.select(F.col("id_a").alias(id_col)).unionByName(
         pairs.select(F.col("id_b").alias(id_col))
     ).distinct()
@@ -435,7 +437,7 @@ def simhash_near_dups(
     corpus-scale path."""
     width = -(-bits // 4)  # ceil
     mask = (1 << width) - 1
-    sh = simhash(df, id_col, text_col, bits=bits, token_hash=token_hash).cache()
+    sh = cache(simhash(df, id_col, text_col, bits=bits, token_hash=token_hash))
     chunks = sh.select(
         "id",
         "simhash",
@@ -527,9 +529,11 @@ def embedding_near_dups(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         F.posexplode(band_sketches(F.col(vec_col))).alias("band", "sketch"),
-    ).cache()  # shed + self-join both read it; don't rerun the UDF (cache,
-    # not lazy localCheckpoint — the latter executes the UDF pass at
-    # plan-build time under AQE)
+    )
+    # shed + self-join both read it; don't rerun the UDF (cache, not lazy
+    # localCheckpoint — the latter executes the UDF pass at plan-build time
+    # under AQE)
+    sk = cache(sk)
     sk = _shed_hot_buckets(sk, ["band", "sketch"], max_bucket)
     a = sk.select("band", "sketch", F.col("id").alias("id_a"), F.col("v").alias("va"))
     b = sk.select("band", "sketch", F.col("id").alias("id_b"), F.col("v").alias("vb"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trustfuse_spark.operators.fusion.base import cache
+
 GROUP = ["bucket_id", "attr"]
 PAIR = ["bucket_id", "attr", "entity", "value"]
 
@@ -38,13 +40,13 @@ def evaluate(
     claims: post-preprocess claims (for the TN/FN universe, the reference's
         data_pp — evaluation.py:191-196 restricts everything to GT entities).
     """
-    gt_pairs = _pairs(
-        gt.select("bucket_id", "entity", "attr", F.explode("gt_values").alias("value_str"))
-    ).cache()
+    gt_pairs = cache(
+        _pairs(gt.select("bucket_id", "entity", "attr", F.explode("gt_values").alias("value_str")))
+    )
     gt_entities = gt_pairs.select("bucket_id", "entity").distinct()
 
-    it_pairs = _pairs(truth).join(gt_entities, ["bucket_id", "entity"], "left_semi").cache()
-    dpp_pairs = _pairs(claims).join(gt_entities, ["bucket_id", "entity"], "left_semi").cache()
+    it_pairs = cache(_pairs(truth).join(gt_entities, ["bucket_id", "entity"], "left_semi"))
+    dpp_pairs = cache(_pairs(claims).join(gt_entities, ["bucket_id", "entity"], "left_semi"))
 
     tp = it_pairs.join(gt_pairs, PAIR, "inner").groupBy(GROUP).agg(F.count("*").alias("tp"))
     fp = it_pairs.join(gt_pairs, PAIR, "left_anti").groupBy(GROUP).agg(F.count("*").alias("fp"))
@@ -69,41 +71,27 @@ def evaluate(
         .join(fn, GROUP, "left")
         .fillna(0, subset=["tp", "fp", "tn", "fn"])
     )
-    p = F.when(F.col("fp") == 0, F.lit(1.0)).otherwise(
-        F.col("tp") / (F.col("tp") + F.col("fp"))
-    )
-    r = F.when((F.col("tp") + F.col("fn")) > 0, F.col("tp") / (F.col("tp") + F.col("fn"))).otherwise(
-        F.lit(0.0)
-    )
-    tot = F.col("tp") + F.col("fp") + F.col("tn") + F.col("fn")
-    acc = F.when(tot > 0, (F.col("tp") + F.col("tn")) / tot).otherwise(F.lit(0.0))
-    m = m.withColumn("p", p).withColumn("r", r).withColumn("acc", acc)
-    f1 = F.when(
-        (F.col("p") + F.col("r")) > 0,
-        2 * F.col("p") * F.col("r") / (F.col("p") + F.col("r")),
-    ).otherwise(F.lit(0.0))
-    c_rate = F.col("tp") / F.col("gt_n")
-    return m.withColumn("f1", f1).withColumn("c_rate", c_rate)
+    return _scores(m).withColumn("c_rate", F.col("tp") / F.col("gt_n"))
 
 
-def overall(metrics_by_attr: DataFrame) -> DataFrame:
-    """Micro-averaged overall P/R/Acc/F1 from the per-attr TP/FP/TN/FN."""
-    agg = metrics_by_attr.agg(
-        F.sum("tp").alias("tp"),
-        F.sum("fp").alias("fp"),
-        F.sum("tn").alias("tn"),
-        F.sum("fn").alias("fn"),
-    )
-    p = F.when(F.col("fp") == 0, F.lit(1.0)).otherwise(F.col("tp") / (F.col("tp") + F.col("fp")))
-    r = F.when((F.col("tp") + F.col("fn")) > 0, F.col("tp") / (F.col("tp") + F.col("fn"))).otherwise(F.lit(0.0))
-    tot = F.col("tp") + F.col("fp") + F.col("tn") + F.col("fn")
-    acc = F.when(tot > 0, (F.col("tp") + F.col("tn")) / tot).otherwise(F.lit(0.0))
-    out = agg.withColumn("p", p).withColumn("r", r).withColumn("acc", acc)
+def _scores(counts: DataFrame) -> DataFrame:
+    """``counts`` with P/R/Acc/F1 (p, r, acc, f1) from its TP/FP/TN/FN."""
+    tp, fp, tn, fn = (F.col(c) for c in ("tp", "fp", "tn", "fn"))
+    p = F.when(fp == 0, F.lit(1.0)).otherwise(tp / (tp + fp))
+    r = F.when((tp + fn) > 0, tp / (tp + fn)).otherwise(F.lit(0.0))
+    tot = tp + fp + tn + fn
+    acc = F.when(tot > 0, (tp + tn) / tot).otherwise(F.lit(0.0))
+    out = counts.withColumn("p", p).withColumn("r", r).withColumn("acc", acc)
     f1 = F.when(
         (F.col("p") + F.col("r")) > 0,
         2 * F.col("p") * F.col("r") / (F.col("p") + F.col("r")),
     ).otherwise(F.lit(0.0))
     return out.withColumn("f1", f1)
+
+
+def overall(metrics_by_attr: DataFrame) -> DataFrame:
+    """Micro-averaged overall P/R/Acc/F1 from the per-attr TP/FP/TN/FN."""
+    return _scores(metrics_by_attr.agg(*[F.sum(c).alias(c) for c in ("tp", "fp", "tn", "fn")]))
 
 
 def specificity(

@@ -39,6 +39,7 @@ from trustfuse_spark.operators.fusion.base import (
     iterate,
     max_abs_change,
     value_key,
+    value_truth,
 )
 
 
@@ -130,12 +131,7 @@ def fuse_accu(
 
     acc, prev = iterate(checkpoint(acc), step, max_itr, None if tol is None else stop)
     # the truth is the vote that produced the final accuracies
-    out_truth = truth_of(prev).select(
-        *FACT_KEYS,
-        "value_str",
-        "value_num",
-        F.col("value_num").isNotNull().alias("is_numeric"),
-    )
+    out_truth = value_truth(truth_of(prev))
     return FusionResult(
         truth=out_truth, weights=acc.select(*WEIGHT_KEYS, F.col("acc").alias("weight"))
     )

@@ -17,6 +17,14 @@ optional stop test; the skeleton materializes each step through one
 generations freed). :func:`rel_l2_change`, :func:`max_abs_change` and
 :func:`settled` are the shared stop tests.
 
+Only this module calls Spark persistence: :func:`checkpoint`, :func:`cache`
+and :func:`release`. An :func:`owned` scope frees on exit every checkpoint
+and cache taken through them inside it (loop generations, prepared claims,
+initial states), so no frame built inside a closed scope may be acted on:
+the action fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+``StageRun.materialize`` scopes each stage, whose output is read back from
+its table.
+
 Claims contract (long form):
     bucket_id:int, source:string, entity:string, attr:string,
     value_str:string, value_num:double (null => categorical claim),
@@ -31,9 +39,13 @@ from __future__ import annotations
 
 import math
 import operator
+import warnings
 from collections.abc import Callable
+from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,15 +94,73 @@ def drop_incomplete_claims(claims: DataFrame) -> DataFrame:
     return claims.filter(complete & finite)
 
 
-def checkpoint(df: DataFrame) -> DataFrame:
-    """Truncate lineage between driver-loop iterations.
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and cut its lineage (localCheckpoint: a lost block
+    cannot be recomputed; a lazy one materializes in its first action). On a
+    cluster, a reliable checkpoint dir on durable storage would let a lost
+    executor's blocks be recomputed; the callers would not change."""
+    return _take(df.localCheckpoint(eager=eager))
 
-    local[*] / tests: localCheckpoint. On a real cluster you would point
-    ``spark.sparkContext.setCheckpointDir`` at durable storage (or write an
-    Iceberg snapshot per iteration — see plans/lineage.py) so a lost executor
-    can recompute; the loop structure is identical.
-    """
-    return df.localCheckpoint(eager=True)
+
+def cache(df: DataFrame) -> DataFrame:
+    """Cache ``df``: it materializes in its first action."""
+    return _take(df.cache())
+
+
+# this thread's innermost owned() scope: the handles taken inside it
+_owned: ContextVar[list | None] = ContextVar("owned", default=None)
+
+
+def _take(df: DataFrame) -> DataFrame:
+    taken = _owned.get()
+    if taken is not None:
+        taken.append(_handle(df))
+    return df
+
+
+def _handle(df: DataFrame):
+    """What frees ``df``'s own materialization: the frame for a cache entry,
+    else its checkpoint's RDD id (never a block-manager diff, which would
+    also free persistence registered concurrently elsewhere, ADVICE r2)."""
+    if df.is_cached:
+        return df
+    try:
+        return int(df._jdf.queryExecution().analyzed().rdd().id())
+    except Py4JError:  # an internal Spark API: a break must show (ADVICE r3)
+        warnings.warn(
+            "LogicalRDD-id probe failed (internal Spark API changed?);"
+            " checkpointed blocks will NOT be freed",
+            RuntimeWarning,
+        )
+        return None
+
+
+def _free(handles) -> None:
+    for h in handles:
+        if isinstance(h, DataFrame) and h.is_cached:
+            h.unpersist(blocking=False)
+    ids = {h for h in handles if isinstance(h, int)}
+    if ids:
+        release_rdds(SparkSession.active(), ids)
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``'s checkpoint or cache, once nothing left to evaluate
+    reads it."""
+    _free([_handle(df)])
+
+
+@contextmanager
+def owned():
+    """Free on exit what this thread checkpoints or caches inside the scope
+    (an inner scope frees its own)."""
+    taken: list = []
+    token = _owned.set(taken)
+    try:
+        yield
+    finally:
+        _owned.reset(token)
+        _free(taken)
 
 
 def persistent_rdd_ids(spark) -> set[int]:
@@ -101,83 +171,37 @@ def persistent_rdd_ids(spark) -> set[int]:
 
 
 def release_rdds(spark, ids) -> int:
-    """Unpersist the blocks of the given RDD ids (non-blocking). Only safe
-    for RDDs whose downstream consumers have already materialized — a
-    localCheckpoint RDD cannot be recomputed once its blocks are dropped."""
-    if not ids:
-        return 0
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for e in jmap.entrySet().toArray():
-        if int(e.getKey()) in ids:
-            e.getValue().unpersist(False)
-            n += 1
-    return n
+    """Unpersist the blocks of the given RDD ids (non-blocking); returns how
+    many were held."""
+    held = spark.sparkContext._jsc.getPersistentRDDs()
+    rdds = [r for r in (held.get(i) for i in ids) if r is not None]
+    for r in rdds:
+        r.unpersist(False)
+    return len(rdds)
 
 
 class CheckpointRotator:
-    """Bound live checkpoint blocks in a driver loop to the latest iteration.
+    """Bound a driver loop's live checkpoints to the newest ``keep``.
 
-    Fusion loops checkpoint a small table every iteration
-    (weights/tau/sigma2/...). Iteration i+1's checkpoint is computed FROM
-    iteration i's, so once i+1 has materialized (checkpoint is eager),
-    iteration i's blocks are dead — but localCheckpoint never frees them.
-    Round-1 bench ran 26 queries in one session and the accumulated blocks
-    inflated later queries 6-7x (VERDICT r1 'bench session bloat').
-
-    rotate(df) = checkpoint(df), then unpersist the blocks of generations
-    older than ``keep``. keep=2 (default) holds the newest two checkpoints:
-    some loops' final lazy output still references the second-to-last
-    checkpoint (e.g. TruthFinder's truth reads the scores built from the
-    previous tau), so freeing only >=2-generations-old is the safe contract.
-    :func:`iterate` is the engine's only user.
+    rotate(df) = checkpoint(df), then free the generations older than
+    ``keep``: each is computed from the one before, so once it has
+    materialized the older ones are dead, but localCheckpoint never frees
+    them (round 1's bench session ran 6-7x slower for it). keep=2 (default),
+    because some loops' final lazy output still reads the second-to-last
+    (TruthFinder's truth reads the scores built from the previous tau).
+    CONTRACT: anything still to be evaluated must derive from one of the
+    newest ``keep``. :func:`iterate` is the engine's only user.
     """
 
-    _probe_warned = False  # class-level: warn once per process, not per loop
-
-    def __init__(self, spark, keep: int = 2) -> None:
-        self._spark = spark
+    def __init__(self, keep: int = 2) -> None:
         self._keep = max(1, keep)
-        self._gens: list[set[int]] = []
+        self._gens: list = []
 
     def rotate(self, df: DataFrame) -> DataFrame:
-        """Checkpoint ``df`` and free generations older than ``keep``.
-
-        CONTRACT: every DataFrame a caller still intends to evaluate must
-        derive from one of the newest ``keep`` rotated checkpoints —
-        localCheckpoint blocks cannot be recomputed, so an action on
-        something holding an older generation fails with missing blocks.
-        Generations are attributed by the checkpointed plan's OWN RDD id
-        (the LogicalRDD produced by localCheckpoint), never a global
-        before/after diff of the block manager — so persistence that
-        happens to register concurrently (a cache() inside the plan, an
-        interleaved rotator, a lazy checkpoint elsewhere) can never be
-        mis-attributed and freed by this rotator (ADVICE r2).
-        """
         out = checkpoint(df)
-        try:
-            # the exact RDD localCheckpoint persisted: the LogicalRDD the
-            # returned Dataset wraps
-            gen = {int(out._jdf.queryExecution().analyzed().rdd().id())}
-        except Exception:  # plan shape changed across Spark versions
-            # Warn once instead of silently reintroducing the r1
-            # checkpoint-block leak (6-7x bench bloat) — a Spark upgrade
-            # that breaks this internal probe must be visible (ADVICE r3).
-            if not CheckpointRotator._probe_warned:
-                CheckpointRotator._probe_warned = True
-                import warnings
-
-                warnings.warn(
-                    "CheckpointRotator: LogicalRDD-id probe failed (internal"
-                    " Spark API changed?); checkpointed blocks will NOT be"
-                    " freed and long fusion loops may leak storage memory",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            gen = set()
-        self._gens.append(gen)
-        while len(self._gens) > self._keep:
-            release_rdds(self._spark, self._gens.pop(0))
+        self._gens.append(_handle(out))
+        if len(self._gens) > self._keep:
+            _free([self._gens.pop(0)])
         return out
 
 
@@ -199,7 +223,7 @@ def iterate(state, step, max_itr: int, stop=None):
     single = not isinstance(state, tuple)
     tables = [state] if single else list(state)
     updates = [step] if single else step
-    rotators = [CheckpointRotator(SparkSession.active()) for _ in tables]
+    rotators = [CheckpointRotator() for _ in tables]
     prev = None
     for _ in range(max_itr):
         for i, update in enumerate(updates):
@@ -275,12 +299,6 @@ def argmax_per_fact(scored: DataFrame, score: Column, value_col: str) -> DataFra
     window form)."""
     return _pick_per_fact(
         scored, F.struct((-score).alias("k1"), F.col(value_col).alias("k2"))
-    )
-
-
-def argmin_per_fact(scored: DataFrame, score: Column, value_col: str) -> DataFrame:
-    return _pick_per_fact(
-        scored, F.struct(score.alias("k1"), F.col(value_col).alias("k2"))
     )
 
 
@@ -370,5 +388,9 @@ def assemble_truth(
     return out
 
 
-def weights_to_triples_weights(weights: DataFrame) -> DataFrame:
-    return weights.select(*WEIGHT_KEYS, "weight")
+def value_truth(facts: DataFrame) -> DataFrame:
+    """The FusionResult.truth schema from one row per fact carrying a claimed
+    value_str and value_num (numeric iff value_num is set)."""
+    return facts.select(
+        *FACT_KEYS, "value_str", "value_num", F.col("value_num").isNotNull().alias("is_numeric")
+    )

@@ -13,14 +13,17 @@ Reference semantics (catd.py, verified):
     truth:  per fact weighted mean Σ w·v / Σ w
   final: snap truth to the nearest claimed value (ties -> smaller value).
 
+The mean is taken over log-weights shifted by the fact's largest: for k
+above about 200, chi2.cdf(0.025, k) underflows to 0 and so would Σ w.
+
 Convergence is evaluated globally across all buckets (max per-bucket err)
 — the reference stops each bucket independently inside its per-bucket loop;
 post-convergence extra iterations are fixed-point no-ops to float precision,
 and the fixed-iteration mode (tol=None) is exactly reproducible.
 
-chi2.cdf(0.025, k) has no Spark builtin; it is evaluated on the tiny
+chi2.cdf(0.025, k) has no Spark builtin; its log is evaluated on the tiny
 per-source weights table via an Arrow-batched pandas UDF implementing the
-regularized lower incomplete gamma P(k/2, 0.0125) by series expansion
+regularized lower incomplete gamma log P(k/2, 0.0125) by series expansion
 (converges in a handful of terms for x = 0.0125).
 """
 
@@ -30,7 +33,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -48,28 +51,20 @@ from trustfuse_spark.operators.fusion.base import (
 )
 
 
-def _gammainc_lower_reg(a: np.ndarray, x: float) -> np.ndarray:
-    """Regularized lower incomplete gamma P(a, x) for small x via the series
-    P(a,x) = x^a e^-x Σ_{n>=0} x^n / Γ(a+n+1)."""
-    out = np.zeros_like(a, dtype="float64")
-    lg = np.vectorize(math.lgamma)
-    log_term = a * math.log(x) - x - lg(a + 1.0)
-    term = np.exp(log_term)
+@pandas_udf(T.DoubleType())
+def log_chi2_cdf_0025(k: pd.Series) -> pd.Series:
+    """log chi2.cdf(0.025, k) = log P(k/2, 0.0125), P(a, x) = x^a e^-x
+    Σ_{n>=0} x^n / Γ(a+n+1), the sum taken relative to its first term so it
+    stays finite where P underflows."""
+    a, x = k.to_numpy(dtype="float64") / 2.0, 0.0125
+    term = np.ones_like(a)
     total = term.copy()
     for n in range(1, 60):
         term = term * x / (a + n)
         total += term
         if np.all(term < 1e-18):
             break
-    out[:] = total
-    return out
-
-
-@pandas_udf(T.DoubleType())
-def chi2_cdf_0025(k: pd.Series) -> pd.Series:
-    """chi-square CDF at x=0.025 with k degrees of freedom = P(k/2, 0.0125)."""
-    a = k.to_numpy(dtype="float64") / 2.0
-    return pd.Series(_gammainc_lower_reg(a, 0.0125))
+    return pd.Series(a * math.log(x) - x - np.vectorize(math.lgamma)(a + 1.0) + np.log(total))
 
 
 def fuse_catd(
@@ -102,14 +97,16 @@ def fuse_catd(
     init_truth = median_per_fact(claims)  # lazy
 
     def truth_of(weights: DataFrame | None) -> DataFrame:
-        """Per-fact weighted mean over broadcast weights (median before the
-        first weights)."""
+        """Per-fact weighted mean over broadcast log-weights, shifted by the
+        fact's largest (median before the first weights)."""
         if weights is None:
             return init_truth
+        shifted = F.exp(F.col("logw") - F.max("logw").over(Window.partitionBy(*FACT_KEYS)))
         return (
             claims.join(F.broadcast(weights), WEIGHT_KEYS)
+            .withColumn("w", shifted)
             .groupBy(*FACT_KEYS)
-            .agg((F.sum(F.col("weight") * F.col("value_num")) / F.sum("weight")).alias("truth_num"))
+            .agg((F.sum(F.col("w") * F.col("value_num")) / F.sum("w")).alias("truth_num"))
         )
 
     def step(weights: DataFrame | None) -> DataFrame:
@@ -118,13 +115,11 @@ def fuse_catd(
             .groupBy(*WEIGHT_KEYS)
             .agg(F.sum((F.col("value_num") - F.col("truth_num")) ** 2).alias("raw"))
         )
+        positive, log_cdf = F.col("raw") > zero_tol, log_chi2_cdf_0025(F.col("cnt"))
         return raw.join(counts, WEIGHT_KEYS).select(
             *WEIGHT_KEYS,
-            F.when(
-                F.col("raw") > zero_tol, chi2_cdf_0025(F.col("cnt")) / F.col("raw")
-            )
-            .otherwise(F.lit(1e10))
-            .alias("weight"),
+            F.when(positive, log_cdf - F.log("raw")).otherwise(math.log(1e10)).alias("logw"),
+            F.when(positive, F.exp(log_cdf) / F.col("raw")).otherwise(1e10).alias("weight"),
         )
 
     def stop(old: DataFrame | None, new: DataFrame) -> bool:
@@ -132,4 +127,4 @@ def fuse_catd(
 
     weights, _ = iterate(None, step, max_itr, None if tol is None else stop)
     num_truth = snap_to_claimed(claims, truth_of(weights))
-    return FusionResult(truth=assemble_truth(None, num_truth), weights=weights)
+    return FusionResult(truth=assemble_truth(None, num_truth), weights=weights.drop("logw"))

@@ -42,7 +42,10 @@ from trustfuse_spark.operators.fusion.base import (
     FACT_KEYS,
     WEIGHT_KEYS,
     FusionResult,
+    cache,
+    checkpoint,
     value_key,
+    value_truth,
 )
 
 _POST_SCHEMA = T.StructType(
@@ -166,7 +169,7 @@ def ltm_posterior_mean(claims: DataFrame, iters: int = 2) -> DataFrame:
     a01, a00 = ALPHA["0"]["1"], ALPHA["0"]["0"]
     lnb = math.log(BETA["0"]) - math.log(BETA["1"])
 
-    bc = binary_claims(claims).localCheckpoint()
+    bc = checkpoint(binary_claims(claims))
     p = bc.select(*FACT_KEYS, "vkey").distinct().withColumn("p", F.lit(0.5))
     is1 = F.col("obs") == "1"
     w1, w0 = F.col("p"), 1 - F.col("p")
@@ -204,11 +207,11 @@ def fuse_ltm(
     threshold: float = 0.9,
     seed: int = 42,
 ) -> FusionResult:
-    bc = binary_claims(claims).cache()
+    bc = cache(binary_claims(claims))
     posteriors = bc.groupBy("bucket_id", "attr").applyInPandas(
         _gibbs_factory(max_itr, burnin, thin, seed), _POST_SCHEMA
     )
-    posteriors = posteriors.cache()
+    posteriors = cache(posteriors)
     # truth: values with posterior >= threshold (multi-valued; join back the
     # typed value columns)
     vals = (
@@ -216,15 +219,8 @@ def fuse_ltm(
         .select(*FACT_KEYS, "vkey", "value_str", "value_num")
         .distinct()
     )
-    truth = (
-        posteriors.filter(F.col("posterior") >= threshold)
-        .join(vals, [*FACT_KEYS, "vkey"])
-        .select(
-            *FACT_KEYS,
-            "value_str",
-            "value_num",
-            F.col("value_num").isNotNull().alias("is_numeric"),
-        )
+    truth = value_truth(
+        posteriors.filter(F.col("posterior") >= threshold).join(vals, [*FACT_KEYS, "vkey"])
     )
     # soft source quality (truth_probability-weighted confusion counts)
     joined = bc.join(posteriors, [*FACT_KEYS, "vkey"])

@@ -28,14 +28,11 @@ from trustfuse_spark.operators.fusion.base import (
 )
 
 
-def fuse_majority(
-    claims: DataFrame, snap_numeric: bool = True, materialize: bool = True
-) -> FusionResult:
-    if materialize:
-        # mode/median/snap/weights each re-derive claims otherwise — with a
-        # lazy extraction upstream that's 4-6 replays of the whole scan
-        # (measured 10.7s -> ~2s on the docs pipeline at sf0.1)
-        claims = checkpoint(claims)
+def fuse_majority(claims: DataFrame, snap_numeric: bool = True) -> FusionResult:
+    # mode/median/snap/weights each re-derive claims otherwise — with a
+    # lazy extraction upstream that's 4-6 replays of the whole scan
+    # (measured 10.7s -> ~2s on the docs pipeline at sf0.1)
+    claims = checkpoint(claims)
     cat, num = split_claims(claims)
     cat_truth = mode_per_fact(cat)
     num_truth = median_per_fact(num)

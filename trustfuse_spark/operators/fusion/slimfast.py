@@ -44,6 +44,7 @@ from trustfuse_spark.operators.fusion.base import (
     FusionResult,
     checkpoint,
     iterate,
+    value_truth,
 )
 
 _W_SCHEMA = T.StructType(
@@ -112,13 +113,8 @@ def fuse_slimfast(
 
     init_w = buckets.withColumn("w_shared", F.lit(-math.log(1.0 / init_accuracy - 1.0)))
     shared_w, prev = iterate(checkpoint(init_w), step, max_itr)
-    truth = truth_of(prev)  # the vote that produced the final shared weight
-    out_truth = truth.select(
-        *FACT_KEYS,
-        "value_str",
-        "value_num",
-        F.col("value_num").isNotNull().alias("is_numeric"),
-    )
+    # the truth is the vote that produced the final shared weight
+    out_truth = value_truth(truth_of(prev))
     weights = (
         prepared.select(*WEIGHT_KEYS)
         .distinct()

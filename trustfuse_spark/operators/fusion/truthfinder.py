@@ -40,6 +40,7 @@ from trustfuse_spark.operators.fusion.base import (
     checkpoint,
     iterate,
     value_key,
+    value_truth,
 )
 
 
@@ -182,12 +183,7 @@ def fuse_truthfinder(
     # tau/pairs) — one job per iteration.
     tau, prev = iterate(tau, step, max_itr)
     # the final truth reads the scores that produced the final tau
-    truth = argmax_per_fact(scores_of(prev), F.col("s"), "vkey").select(
-        *FACT_KEYS,
-        "value_str",
-        "value_num",
-        F.col("value_num").isNotNull().alias("is_numeric"),
-    )
+    truth = value_truth(argmax_per_fact(scores_of(prev), F.col("s"), "vkey"))
     return FusionResult(
         truth=truth, weights=tau.select(*WEIGHT_KEYS, F.col("tau").alias("weight"))
     )

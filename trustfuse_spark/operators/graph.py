@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trustfuse_spark.operators.fusion.base import iterate, settled
+from trustfuse_spark.operators.fusion.base import checkpoint, iterate, settled
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -146,11 +146,13 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
     ra = F.struct(F.col("da").alias("d"), F.col("a").alias("n"))
     rb = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
-    o = w.select(
-        F.when(ra < rb, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(ra < rb, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        F.when(ra < rb, rb).otherwise(ra).alias("rhi"),
-    ).localCheckpoint(eager=True)
+    o = checkpoint(
+        w.select(
+            F.when(ra < rb, F.col("a")).otherwise(F.col("b")).alias("lo"),
+            F.when(ra < rb, F.col("b")).otherwise(F.col("a")).alias("hi"),
+            F.when(ra < rb, rb).otherwise(ra).alias("rhi"),
+        )
+    )
     e1, e2 = o.alias("e1"), o.alias("e2")
     wedges = e1.join(
         e2,
@@ -210,7 +212,7 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
-    nodes = _nodes(edges).localCheckpoint(eager=True)
+    nodes = checkpoint(_nodes(edges))
 
     def step(labels: DataFrame) -> DataFrame:
         nl = (
@@ -269,7 +271,7 @@ def pagerank(
         F.count("*").alias("out_deg")
     )
     # static per-node table: out_deg NULL => dangling
-    base = nodes.join(out_deg, "node", "left").localCheckpoint(eager=True)
+    base = checkpoint(nodes.join(out_deg, "node", "left"))
     n_nodes = base.select(F.count("*").alias("n"))
 
     ranks = base.select("node", "out_deg").crossJoin(
@@ -340,7 +342,7 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 30) -> DataFrame:
     Returns (node, core_deg): the nodes of the k-core with their degree
     inside the core (>= k by construction). Empty when no k-core exists.
     """
-    und = _undirected(edges).localCheckpoint(eager=True)
+    und = checkpoint(_undirected(edges))
 
     def peel(und: DataFrame) -> DataFrame:
         deg = _degrees(und, "deg")
@@ -433,8 +435,8 @@ def hits(
 
     Per iteration: TWO key-partitioned join+agg pairs (contributions keyed
     by dst then by src — the same shape as one pagerank step each) and two
-    1-row normalizer aggregates riding as broadcast cross joins. The score
-    vectors are materialized every ``checkpoint_every`` iterations, as one
+    1-row normalizer aggregates riding as broadcast cross joins. The hub
+    vector is materialized every ``checkpoint_every`` iterations, as one
     ``fusion.base.iterate`` step, so lineage stays bounded.
 
     Returns (node, hub, auth) for EVERY node in the edge universe — sinks
@@ -445,7 +447,7 @@ def hits(
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
     e = edges.select("src", "dst")
-    nodes = _nodes(e).localCheckpoint(eager=True)
+    nodes = checkpoint(_nodes(e))
 
     def advance(hub: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
         for _ in range(n):
@@ -480,15 +482,12 @@ def hits(
         return auth, hub
 
     # the lineage cut falls after every checkpoint_every-th iteration but
-    # the last; both vectors are materialized there, each from the hub of
-    # the previous cut
+    # the last; only hub is materialized there, since every iteration
+    # recomputes auth from it
     k = checkpoint_every
     cuts = (iterations - 1) // k
-    (_, hub), _ = iterate(
-        (None, nodes.select("node", F.lit(1.0).alias("hub"))),
-        (lambda st: advance(st[1], k)[0], lambda st: advance(st[1], k)[1]),
-        cuts,
-    )
+    hub0 = nodes.select("node", F.lit(1.0).alias("hub"))
+    hub, _ = iterate(hub0, lambda h: advance(h, k)[1], cuts)
     auth, hub = advance(hub, iterations - cuts * k)
     return nodes.join(hub, "node").join(auth, "node").select("node", "hub", "auth")
 
@@ -518,9 +517,7 @@ def shortest_paths(
     nodes. Integer-valued weights keep every path sum exact in double, so
     the result is engine-portable without rounding.
     """
-    dist = sources.select(
-        F.col("node"), F.lit(0.0).alias("dist")
-    ).localCheckpoint(eager=True)
+    dist = checkpoint(sources.select(F.col("node"), F.lit(0.0).alias("dist")))
 
     def relax(dist: DataFrame) -> DataFrame:
         relaxed = (

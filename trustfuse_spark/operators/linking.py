@@ -54,7 +54,7 @@ from trustfuse_spark.operators.dedup import (
     minhash_signatures,
     shingles,
 )
-from trustfuse_spark.operators.fusion.base import checkpoint
+from trustfuse_spark.operators.fusion.base import checkpoint, release
 
 # Largest surface set blocked and verified on the driver: the local path won
 # at 204k surfaces (51.5 vs 57.9 s) and lost at 408k (121.7 vs 104.9 s).
@@ -122,6 +122,7 @@ def candidate_links(
     rows_per_band = num_hashes // bands
     head = sig.limit(LOCAL_MAX_SURFACES + 1).toPandas()
     if len(head) <= LOCAL_MAX_SURFACES:
+        release(sig)  # the driver has every row it needs
         id_type = sig.schema["id"].dataType
         return sig.sparkSession.createDataFrame(
             _local_links(head, bands, rows_per_band, min_jaro),

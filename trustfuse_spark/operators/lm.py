@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trustfuse_spark.operators.fusion.base import cache, release
+
 
 def _tokens(text):
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
@@ -227,8 +229,8 @@ def train_bpe(
     Ties break deterministically: highest count, then lexicographically
     smallest "a b" pair — pinned so retries, re-runs, and the SQL oracle
     agree. Rounds stop early if no pair occurs twice. The vocab DataFrame
-    is localCheckpoint-rotated per round so the plan does not grow with
-    ``n_merges``.
+    is cached per round, and a round's argmax collect materializes it, so
+    the previous round's vocab is released there: at most two are held.
 
     Returns ``(merges, vocab)``: merges as [(a, b, count), ...] in rule
     order; vocab as (word, cnt, syms) with ``syms`` the space-joined final
@@ -244,12 +246,12 @@ def train_bpe(
         .withColumn(
             "syms", F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 "))
         )
-        # cache, not lazy localCheckpoint: a lazy checkpoint executes its
-        # upstream stages at call time under AQE, adding one synchronous
-        # job per merge round; cache materializes inside the round's own
-        # argmax collect instead (plan depth stays bounded by n_merges)
-        .cache()
     )
+    # cache, not lazy localCheckpoint: a lazy checkpoint executes its
+    # upstream stages at call time under AQE, adding one synchronous
+    # job per merge round; cache materializes inside the round's own
+    # argmax collect instead (plan depth stays bounded by n_merges)
+    words, prev = cache(words), None
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         s = F.split(F.col("syms"), " ")
@@ -267,15 +269,17 @@ def train_bpe(
             .limit(1)
             .collect()
         )
+        if prev is not None:
+            release(prev)  # the collect materialized words from it
         if not best:
             break
         a, b = best[0]["pair"].split(" ", 1)
         merges.append((a, b, int(best[0]["n"])))
         pat = f"(?<=^| ){_re.escape(a)} {_re.escape(b)}(?= |$)"
         repl = (a + b).replace("\\", "\\\\").replace("$", "\\$")
-        words = words.withColumn(
-            "syms", F.regexp_replace("syms", pat, repl)
-        ).cache()
+        prev, words = words, cache(
+            words.withColumn("syms", F.regexp_replace("syms", pat, repl))
+        )
     return merges, words.select("word", "cnt", "syms")
 
 

@@ -20,6 +20,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trustfuse_spark.operators.fusion.base import owned
+
 
 class ParquetSink:
     """Local/dev table sink: one parquet directory per stage under the run
@@ -123,11 +125,12 @@ class StageRun:
         """Run df_fn() -> DataFrame unless the stage output already exists;
         either way return the stage's table (reading back from storage, so
         downstream lineage starts at the table boundary — the resume point).
+        Checkpoints and caches taken for the stage are freed once written.
         """
         if not self.is_done(stage):
             t0 = time.perf_counter()
-            df = df_fn()
-            self.sink.write(df, stage, partition_by)
+            with owned():
+                self.sink.write(df_fn(), stage, partition_by)
             wall_ms = int((time.perf_counter() - t0) * 1000)
             out = self.sink.read(self.spark, stage)
             # file-level lineage: rows per WRITTEN file (input_file_name of
