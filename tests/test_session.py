@@ -17,6 +17,7 @@ from trustfuse_spark.session import (
     CODEGEN_CACHE_MAX_ENTRIES,
     DRIVER_MEM_CAP_MB,
     default_driver_memory,
+    get_spark,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -124,3 +125,20 @@ def test_repeated_pipeline_compiles_nothing(spark, tmp_path):
         spark.conf.set(key, prev)
     assert second == first and first[0] and first[1]
     assert after - before == 0, f"{after - before} classes recompiled"
+
+
+def test_join_tuning_defaults_and_extra_conf_override(spark):
+    """The advisory partition size and the shuffled-hash-join settings are
+    fixed defaults; extra_conf is the one way to change them."""
+    assert spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "4m"
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    key = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    assert spark.conf.get(key) == "64m"
+    try:
+        same = get_spark(
+            app_name="trustfuse_spark_tests", master="local[4]", shuffle_partitions=8,
+            extra_conf={key: "32m"},
+        )
+        assert same is spark and spark.conf.get(key) == "32m"
+    finally:
+        spark.conf.set(key, "64m")

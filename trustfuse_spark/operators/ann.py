@@ -1,4 +1,5 @@
-"""Approximate nearest neighbors over embedding columns.
+"""Approximate nearest neighbors over embedding columns, and the engine's
+one home for vector math.
 
   brute_force_topk : exact cosine top-k — the correctness baseline.
                      queries are broadcast; candidates stream (scales with
@@ -8,14 +9,30 @@
                      DataFrame aggs), probe the nprobe nearest cells only.
                      The scale path: scan cost drops by ncells/nprobe.
 
-Everything is expression-level (zip_with/aggregate dot products). At 100 TB
-the candidate side stays partitioned; only centroids and queries broadcast.
+Vector folds. Every expression over two vectors in the engine is built
+here: `_dot`, `_norm`, `cosine` and `_sqdist` are left-to-right
+``aggregate(zip_with(...))`` folds in float64 (float32 widens before any
+product), `_cell_expr` is the nearest-centroid argmin over `_sqdist`, and
+`subspaces` is the product-quantization split. `_cosine_ltr` is the
+vectorized twin of `cosine`: the same left-to-right accumulation over an
+Arrow batch in numpy, so the doubles are bit-identical.
+
+Zero-norm rule. The cosine of a pair in which either vector has norm 0 is
+NULL, in both `cosine` and `_cosine_ltr`: no divide-by-zero under ANSI
+mode, and a ``>= threshold`` filter drops the pair.
+
+Everything else is expression-level. At 100 TB the candidate side stays
+partitioned; only centroids and queries broadcast.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from trustfuse_spark.operators.fusion.base import checkpoint
 
@@ -34,6 +51,69 @@ def _norm(a: Column) -> Column:
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
             F.lit(0.0),
             lambda acc, x: acc + x,
+        )
+    )
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine of two vector columns; NULL when the norms' product is 0 (a
+    zero vector), where a plain division fails under ANSI mode."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
+@pandas_udf(T.DoubleType())
+def _cosine_ltr(va: pd.Series, vb: pd.Series) -> pd.Series:
+    """`cosine`, vectorized across an Arrow batch: an explicit
+    per-dimension LEFT-TO-RIGHT float64 accumulation of the dot product and
+    both squared norms — the same IEEE-754 operations in the same order as
+    the fold, so the same doubles, without interpreted per-element
+    evaluation. float32 inputs widen to float64 BEFORE any product (exact —
+    the same per-element cast the fold applies).
+
+    A NULL vector, a pair of unequal lengths (``zip_with`` pads the shorter
+    side with NULLs) and a zero vector all give a NULL cosine, as the fold
+    does, so the ``>= threshold`` filter drops the row instead of the stage
+    failing. Pairs are stacked per common length; NaN leaves the UDF as
+    NULL."""
+    va, vb = va.to_numpy(), vb.to_numpy()
+    la = np.array([-1 if v is None else len(v) for v in va])
+    lb = np.array([-1 if v is None else len(v) for v in vb])
+    ok = (la == lb) & (la >= 0)
+    out = np.full(len(va), np.nan)
+    for d in np.unique(la[ok]):
+        idx = np.flatnonzero(ok & (la == d))
+        A = np.vstack(va[idx]).astype(np.float64, copy=False)
+        B = np.vstack(vb[idx]).astype(np.float64, copy=False)
+        dot = np.zeros(len(idx))
+        na = np.zeros(len(idx))
+        nb = np.zeros(len(idx))
+        for j in range(d):
+            dot += A[:, j] * B[:, j]
+            na += A[:, j] * A[:, j]
+            nb += B[:, j] * B[:, j]
+        den = np.sqrt(na) * np.sqrt(nb)
+        nz = den != 0
+        out[idx[nz]] = dot[nz] / den[nz]
+    return pd.Series(out)
+
+
+def subspaces(vec_col: str, n_sub: int, sub_dim: int) -> Column:
+    """Generator of one ``(sub, v)`` row per contiguous ``sub_dim``-dim
+    slice of ``vec_col`` (``n_sub`` of them), widened to double: the
+    product-quantization split (`embeddings.product_quantize`,
+    `embeddings.pq_adc_topk`)."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(s).alias("sub"),
+                    F.transform(
+                        F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim),
+                        lambda x: x.cast("double"),
+                    ).alias("v"),
+                )
+                for s in range(n_sub)
+            ]
         )
     )
 
@@ -68,7 +148,7 @@ def brute_force_topk(
     sims = q.crossJoin(c).select(
         "qid",
         "cid",
-        (_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("cosine"),
+        cosine(F.col("qv"), F.col("cv")).alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
     return (
@@ -236,7 +316,7 @@ def ivf_topk(
     sims = cand_cells.join(probed, "cell").select(
         "qid",
         "cid",
-        (_dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("cosine"),
+        cosine(F.col("qv"), F.col("cv")).alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
     return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

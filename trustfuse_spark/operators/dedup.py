@@ -7,9 +7,17 @@ Python in the hot path. They serve two masters:
   * training-data pipeline dedup over the documents table (exact,
     MinHash-LSH near-dup, SimHash, n-gram Jaccard, embedding cosine).
 
-Scale notes: every stage is a hash-partitioned groupBy/join; the LSH band
-join's fan-out is bounded by band-bucket sizes (cap with `max_bucket` to
-shed degenerate buckets — the standard guard against hot buckets at 100 TB).
+One pair blocker. Every bucket self-join in the engine — the MinHash band
+buckets, SimHash chunks, hyperplane sketches and semantic cells here, PQ
+codes (embeddings.pq_candidate_pairs) and edit-distance variants
+(linking.edit_distance_pairs) — goes through `bucket_pairs`, which emits
+one (id_a < id_b) row per pair per shared bucket; each caller dedups the
+pairs its own way. Shed rule: a bucket of more than ``max_bucket`` members
+is dropped whole before the join, and a bucket of exactly ``max_bucket``
+still pairs (the quadratic guard against degenerate hot buckets at
+100 TB); ``max_bucket=None`` keeps every bucket.
+
+Vector math (cosines, distances) lives in operators/ann.py.
 """
 
 from __future__ import annotations
@@ -21,6 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from trustfuse_spark.operators.ann import (
+    _cell_expr,
+    _cosine_ltr,
+    collect_centroids,
+    cosine,
+    train_centroids,
+)
 from trustfuse_spark.operators.fusion.base import cache
 
 
@@ -52,6 +67,33 @@ def _shed_hot_buckets(df: DataFrame, keys: list[str], max_bucket: int) -> DataFr
         .select(*keys)
     )
     return df.join(F.broadcast(hot), keys, "left_anti")
+
+
+def bucket_pairs(
+    rows: DataFrame, keys: list[str], max_bucket: int | None, carry=()
+) -> DataFrame:
+    """The pair blocker: ``rows`` carry an ``id`` column and the bucket
+    ``keys``; every two rows that share a bucket give one ``(id_a, id_b,
+    *carry_a, *carry_b)`` row with id_a < id_b, where ``{c}_a``/``{c}_b``
+    are the two rows' values of each ``carry`` column. A pair that shares k
+    buckets appears k times, so the caller dedups (distinct, count, first).
+
+    Buckets of more than ``max_bucket`` rows are shed first
+    (`_shed_hot_buckets`); ``None`` sheds nothing."""
+    if max_bucket is not None:
+        rows = _shed_hot_buckets(rows, keys, max_bucket)
+
+    def side(s: str) -> DataFrame:
+        return rows.select(
+            *keys, F.col("id").alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in carry]
+        )
+
+    return (
+        side("a")
+        .join(side("b"), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}_a" for c in carry], *[f"{c}_b" for c in carry])
+    )
 
 
 def shingles(
@@ -158,15 +200,7 @@ def lsh_candidate_pairs(
             )
         ).alias("band", "bucket"),
     )
-    sized = _shed_hot_buckets(banded, ["band", "bucket"], max_bucket)
-    a = sized.select("band", "bucket", F.col("id").alias("id_a"))
-    b = sized.select("band", "bucket", F.col("id").alias("id_b"))
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return bucket_pairs(banded, ["band", "bucket"], max_bucket).distinct()
 
 
 def exact_jaccard(
@@ -261,7 +295,6 @@ def near_duplicates_minhash(
     num_hashes: int = 32,
     bands: int = 4,
     threshold: float = 0.8,
-    sig_prefilter: bool = True,
     hash_shingles: bool = False,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs verified by exact Jaccard >= threshold.
@@ -282,31 +315,28 @@ def near_duplicates_minhash(
     raw = shingles(df, id_col, text_col, n, distinct=False)
     sigs = cache(minhash_signatures(raw, num_hashes))
     cand = lsh_candidate_pairs(sigs, bands, num_hashes // bands)
-    if sig_prefilter:
-        # Signature-agreement prefilter — PROBABILISTIC, not lossless: the
-        # expected fraction of matching minhashes IS the Jaccard, so pairs
-        # estimated >3 sigma below the threshold are dropped before the
-        # per-shingle intersection join. A pair whose true Jaccard sits
-        # exactly AT the threshold is missed w.p. ~1e-3 (the one-sided
-        # 3-sigma tail of Binomial(num_hashes, threshold)), vanishing as the
-        # true Jaccard rises above it. Callers needing the exact
-        # candidate-verify contract (every LSH candidate exactly verified)
-        # pass sig_prefilter=False; the remaining size-ratio prefilter in
-        # exact_jaccard is an exact bound and stays on either way.
-        import math
+    # Signature-agreement prefilter — PROBABILISTIC, not lossless: the
+    # expected fraction of matching minhashes IS the Jaccard, so pairs
+    # estimated >3 sigma below the threshold are dropped before the
+    # per-shingle intersection join. A pair whose true Jaccard sits
+    # exactly AT the threshold is missed w.p. ~1e-3 (the one-sided
+    # 3-sigma tail of Binomial(num_hashes, threshold)), vanishing as the
+    # true Jaccard rises above it. The size-ratio prefilter in
+    # exact_jaccard is an exact bound.
+    import math
 
-        cutoff = threshold - 3.0 * math.sqrt(threshold * (1 - threshold) / num_hashes)
-        matches = F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
+    cutoff = threshold - 3.0 * math.sqrt(threshold * (1 - threshold) / num_hashes)
+    matches = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
+    )
+    cand = (
+        cand.join(
+            sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
         )
-        cand = (
-            cand.join(
-                sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
-            )
-            .join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-            .filter(matches >= F.lit(cutoff * num_hashes))
-            .select("id_a", "id_b")
-        )
+        .join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
+        .filter(matches >= F.lit(cutoff * num_hashes))
+        .select("id_a", "id_b")
+    )
     pairs = cache(cand)
     cand_ids = pairs.select(F.col("id_a").alias(id_col)).unionByName(
         pairs.select(F.col("id_b").alias(id_col))
@@ -324,9 +354,7 @@ def near_duplicates_minhash(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def exact_duplicates(
-    df: DataFrame, id_col: str, text_col: str, collect_ids: bool = False
-) -> DataFrame:
+def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact text dedup: representative = min id per distinct content.
 
     Hash-first, verify-second (the 100 TB shape — VERDICT r2 'what's wrong'
@@ -336,27 +364,19 @@ def exact_duplicates(
     re-grouped by their actual text, so two distinct texts colliding in the
     hash can never merge: the result is exactly groupBy(text), at ~1e-4 of
     the shuffle volume on a mostly-unique corpus.
-
-    collect_ids=True adds the sorted member-id array per group (bounded by
-    the group size; leave off at scale — a hot text's id list is the one
-    unbounded driver of row width).
     """
     ids_h = df.select(
         F.col(id_col).alias("__id"), F.xxhash64(F.col(text_col)).alias("__h")
     )
     id_aggs = [F.min("__id").alias("rep_id"), F.count("*").alias("n_copies")]
-    if collect_ids:
-        id_aggs.append(F.sort_array(F.collect_list("__id")).alias("all_ids"))
     counts = ids_h.groupBy("__h").agg(*id_aggs)
-    out_cols = ["rep_id", "n_copies"] + (["all_ids"] if collect_ids else [])
+    out_cols = ["rep_id", "n_copies"]
     singles = counts.filter(F.col("n_copies") == 1).select(*out_cols)
     # verify stage: only docs in multi-member hash groups shuffle their text;
     # multi_h is small (one row per duplicated text) — AQE broadcasts it.
     multi_h = counts.filter(F.col("n_copies") > 1).select("__h")
     dup_docs = df.withColumn("__h", F.xxhash64(F.col(text_col))).join(multi_h, "__h")
     ver_aggs = [F.min(id_col).alias("rep_id"), F.count("*").alias("n_copies")]
-    if collect_ids:
-        ver_aggs.append(F.sort_array(F.collect_list(id_col)).alias("all_ids"))
     verified = dup_docs.groupBy(text_col).agg(*ver_aggs).select(*out_cols)
     return singles.unionByName(verified)
 
@@ -452,16 +472,10 @@ def simhash_near_dups(
             )
         ).alias("chunk_idx", "chunk"),
     )
-    chunks = _shed_hot_buckets(chunks, ["chunk_idx", "chunk"], max_bucket)
-    a = chunks.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "chunk_idx", "chunk")
-    b = chunks.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "chunk_idx", "chunk")
-    pairs = (
-        a.join(b, ["chunk_idx", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    pairs = bucket_pairs(
+        chunks, ["chunk_idx", "chunk"], max_bucket, carry=["simhash"]
+    ).distinct()
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return pairs.select("id_a", "id_b", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
@@ -534,31 +548,15 @@ def embedding_near_dups(
     # localCheckpoint — the latter executes the UDF pass at plan-build time
     # under AQE)
     sk = cache(sk)
-    sk = _shed_hot_buckets(sk, ["band", "sketch"], max_bucket)
-    a = sk.select("band", "sketch", F.col("id").alias("id_a"), F.col("v").alias("va"))
-    b = sk.select("band", "sketch", F.col("id").alias("id_b"), F.col("v").alias("vb"))
     cand = (
-        a.join(b, ["band", "sketch"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(sk, ["band", "sketch"], max_bucket, carry=["v"])
         # a pair colliding in k bands appears k times: dedupe BEFORE the
         # cosine so the verify cost is once per candidate pair
         .groupBy("id_a", "id_b")
-        .agg(F.first("va").alias("va"), F.first("vb").alias("vb"))
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        .agg(F.first("v_a").alias("v_a"), F.first("v_b").alias("v_b"))
     )
     return cand.select(
-        "id_a", "id_b", (dot / (norm(F.col("va")) * norm(F.col("vb")))).alias("cosine")
+        "id_a", "id_b", cosine(F.col("v_a"), F.col("v_b")).alias("cosine")
     ).filter(F.col("cosine") >= threshold)
 
 
@@ -675,41 +673,6 @@ def duplicated_spans(
         ).alias("dup_frac"),
     )
 
-@pandas_udf(T.DoubleType())
-def _cosine_ltr(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """Cosine of two equal-length double arrays, computed with an explicit
-    per-dimension LEFT-TO-RIGHT float64 accumulation — bit-identical to the
-    ``F.aggregate(zip_with(...))`` fold it replaces (acc = (acc + a_j*b_j)
-    in dimension order; norms likewise; IEEE-754 ops in the same order give
-    the same doubles), but vectorized across the whole Arrow batch instead
-    of interpreted per element (the verify stage of the embedding dedup
-    legs was fold-dominated). float32 inputs widen to float64 BEFORE any
-    product (exact — the same per-element cast the fold applied).
-
-    A NULL vector or a pair of unequal lengths gives a NULL cosine, as the
-    fold did (``zip_with`` pads the shorter side with NULLs), so the
-    ``>= threshold`` filter drops the row instead of the stage failing.
-    Pairs are stacked per common length; NaN leaves the UDF as NULL."""
-    va, vb = va.to_numpy(), vb.to_numpy()
-    la = np.array([-1 if v is None else len(v) for v in va])
-    lb = np.array([-1 if v is None else len(v) for v in vb])
-    ok = (la == lb) & (la >= 0)
-    out = np.full(len(va), np.nan)
-    for d in np.unique(la[ok]):
-        idx = np.flatnonzero(ok & (la == d))
-        A = np.vstack(va[idx]).astype(np.float64, copy=False)
-        B = np.vstack(vb[idx]).astype(np.float64, copy=False)
-        dot = np.zeros(len(idx))
-        na = np.zeros(len(idx))
-        nb = np.zeros(len(idx))
-        for j in range(d):
-            dot += A[:, j] * B[:, j]
-            na += A[:, j] * A[:, j]
-            nb += B[:, j] * B[:, j]
-        out[idx] = dot / (np.sqrt(na) * np.sqrt(nb))
-    return pd.Series(out)
-
-
 def axis_sign_cells(vec_col: str, n_bits: int = 4):
     """Portable cell assignment for `semantic_dedup`: bit ``i`` of the cell
     id is ``v[i+1] > 0``. Pure comparisons — no float arithmetic — so any
@@ -756,8 +719,6 @@ def semantic_dedup(
     centroids trained by `ann.train_centroids` (seeded, Lloyd ``kmeans_iters``
     rounds).
     """
-    from trustfuse_spark.operators.ann import _cell_expr, collect_centroids, train_centroids
-
     if cell_expr is None:
         cents = collect_centroids(
             train_centroids(df, vec_col=vec_col, ncells=ncells, iters=kmeans_iters)
@@ -766,15 +727,15 @@ def semantic_dedup(
     cells = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), cell_expr.alias("cell")
     )
-    cells = _shed_hot_buckets(cells, ["cell"], max_cell)
-    a = cells.select("cell", F.col("id").alias("cand_id"), F.col("v").alias("va"))
-    b = cells.select("cell", F.col("id").alias("keeper"), F.col("v").alias("vb"))
     scored = (
-        a.join(b, "cell")
-        .filter(F.col("keeper") < F.col("cand_id"))
+        bucket_pairs(cells, ["cell"], max_cell, carry=["v"])
         # cosine via the batch-vectorized left-to-right fold (_cosine_ltr):
         # bit-identical doubles, no interpreted per-element evaluation
-        .select("cand_id", "keeper", _cosine_ltr("va", "vb").alias("cosine"))
+        .select(
+            F.col("id_b").alias("cand_id"),
+            F.col("id_a").alias("keeper"),
+            _cosine_ltr("v_b", "v_a").alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
     )
     best = scored.groupBy("cand_id").agg(

@@ -42,6 +42,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from trustfuse_spark.operators.ann import _cell_expr, _sqdist, cosine, subspaces
+from trustfuse_spark.operators.dedup import bucket_pairs
+
 _MOM_SCHEMA = StructType(
     [
         StructField("i", LongType()),
@@ -212,23 +215,7 @@ def product_quantize(
     Returns (codes, centroids): codes = (id, sub, code); centroids =
     (sub, code, dim, value) with the final rounded codebook.
     """
-    slices = embs.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.transform(
-                            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim),
-                            lambda x: x.cast("double"),
-                        ).alias("v"),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("sl"),
-    ).select("id", F.col("sl.sub").alias("sub"), F.col("sl.v").alias("v"))
+    slices = embs.select(F.col(id_col).alias("id"), subspaces(vec_col, n_sub, sub_dim))
 
     # init: slices of the k lowest ids, centroid j = j-th lowest (bounded)
     init_rows = (
@@ -288,28 +275,13 @@ def product_quantize(
         return df.mapInPandas(_fn, schema)
 
     def _assign_fold(df):
-        code_cols = []
-        for s in range(n_sub):
-            dists = F.array(
-                *[
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("v"),
-                            F.array(*[F.lit(c) for c in cent[(s, j)]]),
-                            lambda a, b: (a - b) * (a - b),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    for j in range(k)
-                ]
+        code_cols = [
+            F.when(
+                F.col("sub") == s,
+                _cell_expr([cent[(s, j)] for j in range(k)], "v").cast("long"),
             )
-            code_cols.append(
-                F.when(
-                    F.col("sub") == s,
-                    (F.array_position(dists, F.array_min(dists)) - 1).cast("long"),
-                )
-            )
+            for s in range(n_sub)
+        ]
         return df.withColumn("code", F.coalesce(*code_cols))
 
     _assign = _assign_np if vectorized else _assign_fold
@@ -375,23 +347,7 @@ def pq_adc_topk(
     """
     from pyspark.sql import Window
 
-    qslices = queries.select(
-        F.col(id_col).alias("qid"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.transform(
-                            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim),
-                            lambda x: x.cast("double"),
-                        ).alias("qv"),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("sl"),
-    ).select("qid", F.col("sl.sub").alias("sub"), F.col("sl.qv").alias("qv"))
+    qslices = queries.select(F.col(id_col).alias("qid"), subspaces(vec_col, n_sub, sub_dim))
     cent_arr = centroids.groupBy("sub", "code").agg(
         F.array_sort(
             F.collect_list(F.struct("dim", "value"))
@@ -403,11 +359,7 @@ def pq_adc_topk(
         "qid",
         "sub",
         "code",
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d"),
+        _sqdist(F.col("v"), F.col("c")).alias("d"),
     )
     sums = (
         codes.join(F.broadcast(table), ["sub", "code"])
@@ -447,16 +399,8 @@ def pq_candidate_pairs(
 
     Returns (id_a, id_b, n_shared, cosine), id_a < id_b.
     """
-    from trustfuse_spark.operators.ann import _dot, _norm
-
-    sizes = codes.groupBy("sub", "code").agg(F.count(F.lit(1)).alias("__n"))
-    keep = sizes.filter(F.col("__n") <= max_bucket).select("sub", "code")
-    kept = codes.join(F.broadcast(keep), ["sub", "code"], "left_semi")
-    a = kept.select("sub", "code", F.col("id").alias("id_a"))
-    b = kept.select("sub", "code", F.col("id").alias("id_b"))
     shared = (
-        a.join(b, ["sub", "code"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(codes, ["sub", "code"], max_bucket)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -474,9 +418,6 @@ def pq_candidate_pairs(
             "id_a",
             "id_b",
             "n_shared",
-            (
-                _dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb")))
-            ).alias("cosine"),
+            cosine(F.col("va"), F.col("vb")).alias("cosine"),
         )
     )

@@ -40,9 +40,9 @@ bucket, 4 vCPUs, max_itr=3: the kernel took 19.5 s at 5M claims and 45 s at
 225 bytes per claim (1.2 GB at 5M, 2.3 GB at 10M, 4.5 GB at 20M). With one
 kernel task per core beside the default driver heap (half the host's
 memory), 5M-claim buckets still fit a 16 GB host and 10M-claim buckets do
-not. Revision buckets (``bucket_from="rev"``) hold every entity's claims of
-one revision, about 21 per entity at 20 sources, so corpora past roughly
-240k entities reach the fallback.
+not. Revision buckets (the bucket_id of ``docs_to_claims``) hold every
+entity's claims of one revision, about 21 per entity at 20 sources, so
+corpora past roughly 240k entities reach the fallback.
 """
 
 from __future__ import annotations

@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 from trustfuse_spark.functions.similarity import jaro_py, jaro_udf
 from trustfuse_spark.operators.cc import connected_components
 from trustfuse_spark.operators.dedup import (
+    bucket_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
     shingles,
@@ -201,31 +202,28 @@ def edit_distance_pairs(
     are candidate-sized. Returns (val_a, val_b, dist=1), val_a < val_b.
     """
     vals = (
-        df.select(F.col(col).alias("val"))
-        .filter(F.length("val").between(1, max_len))
+        df.select(F.col(col).alias("id"))
+        .filter(F.length("id").between(1, max_len))
         .distinct()
     )
     variants = vals.select(
-        "val",
+        "id",
         F.explode(
             F.array_union(
                 F.transform(
-                    F.sequence(F.lit(1), F.length("val")),
+                    F.sequence(F.lit(1), F.length("id")),
                     lambda i: F.concat(
-                        F.col("val").substr(F.lit(1), i - 1),
-                        F.col("val").substr(i + 1, F.lit(1000)),
+                        F.col("id").substr(F.lit(1), i - 1),
+                        F.col("id").substr(i + 1, F.lit(1000)),
                     ),
                 ),
-                F.array(F.col("val")),
+                F.array(F.col("id")),
             )
         ).alias("variant"),
     )
-    a = variants.select(F.col("val").alias("val_a"), "variant")
-    b = variants.select(F.col("val").alias("val_b"), "variant")
     cand = (
-        a.join(b, "variant")
-        .filter(F.col("val_a") < F.col("val_b"))
-        .select("val_a", "val_b")
+        bucket_pairs(variants, ["variant"], None)
+        .select(F.col("id_a").alias("val_a"), F.col("id_b").alias("val_b"))
         .distinct()
     )
     return cand.filter(F.levenshtein("val_a", "val_b") == 1).withColumn(

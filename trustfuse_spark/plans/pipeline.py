@@ -30,15 +30,14 @@ def docs_to_claims(
     docs: DataFrame,
     attr_types: DataFrame | None = None,
     use_arrow_udf: bool = False,
-    bucket_from: str = "rev",
 ) -> DataFrame:
     """Extraction + typed preprocessing: docs -> long-form claims.
 
     attr_types: optional dim table (attr, claim_type) — the reference's
     externally supplied attribute-type dict (fusion_pipeline.py:61-71) as a
     broadcast dim. Untyped attrs default to 'string'.
-    bucket_from='rev' derives bucket_id from the doc's revision suffix;
-    temporal sessionization lives in operators/bucketize.py.
+    bucket_id is the doc's revision suffix; temporal sessionization lives in
+    operators/bucketize.py.
     """
     extractor = extract_claims_arrow if use_arrow_udf else extract_claims
     claims = extractor(docs)
@@ -56,11 +55,10 @@ def docs_to_claims(
     claims = claims.withColumn(
         "claim_type", F.coalesce("claim_type", F.lit(ATTR_TYPE_DEFAULT))
     )
-    if bucket_from == "rev":
-        claims = claims.withColumn(
-            "bucket_id",
-            F.element_at(F.split("doc_id", "_"), -1).cast("int"),
-        )
+    claims = claims.withColumn(
+        "bucket_id",
+        F.element_at(F.split("doc_id", "_"), -1).cast("int"),
+    )
     claims = claims.withColumn(
         "value_num", normalize_claim_value(F.col("value_str"), F.col("claim_type"))
     )

@@ -87,12 +87,9 @@ def get_spark(
         # otherwise dominates (measured 5x on the CRH loop). The advisory is
         # deliberately small so medium inputs still fan out across cores
         # (64m serialized a ~100MB-shuffle job to 1 partition and inverted
-        # the 8->32-core scaling); override via SPARK_GRAFT_ADVISORY.
+        # the 8->32-core scaling); override it through extra_conf.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY", "4m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Let the planner choose shuffled-hash over sort-merge when its size
@@ -102,7 +99,7 @@ def get_spark(
         # threshold below additionally converts planned SMJs whose
         # post-shuffle build partitions are verifiably small at runtime —
         # the guarded form, so a huge build-side partition still gets the
-        # spill-safe sort-merge. Both parameterised for cluster overrides.
+        # spill-safe sort-merge. extra_conf overrides both on a cluster.
         # Exposure: with preferSortMergeJoin=false the STATIC planner may
         # also pick a shuffled-hash join from relation-level size estimates
         # (made before execution, blind to per-partition skew), and that
@@ -110,16 +107,10 @@ def get_spark(
         # Only the AQE rewrite checks every post-shuffle partition at
         # runtime. A skewed or underestimated build side can therefore fail
         # a task with OOM where sort-merge would have spilled;
-        # SPARK_GRAFT_PREFER_SMJ=true limits shuffled-hash joins to the
-        # runtime-checked AQE rewrite.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # extra_conf={"spark.sql.join.preferSortMergeJoin": "true"} limits
+        # shuffled-hash joins to the runtime-checked AQE rewrite.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config(
