@@ -1032,7 +1032,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every documents row gets a planted payload — PPM P6 for even doc_ids,
     4-byte-padded bottom-up 24-bit BMP for odd — whose pixel at (y, x,
     channel) is (doc_id + 3x + 5y + 11c) % 256. The PRODUCTION decoder
-    (operators/multimodal.extract_features fake=False, Arrow mapInPandas)
+    (operators/multimodal.extract_features, Arrow mapInPandas)
     parses the raw bytes; the per-channel integer pixel SUMS are then
     recovered exactly from its float32 channel means (sum = mean*255*w*h
     <= 40k << 2^24, so the float32 round-trip is exact after rounding —
@@ -1089,7 +1089,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = docs.mapInPandas(
         synth, "media_ref string, media_type string, payload binary"
     )
-    feats = extract_features(media, dim=8, fake=False)
+    feats = extract_features(media, dim=8)
     f = F.col("feature")
     w = F.element_at(f, 1).cast("int")
     h = F.element_at(f, 2).cast("int")
@@ -1814,9 +1814,8 @@ def ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 6 dp; the oracle re-derives E[x], E[x x^T] and the covariance from
     an unnested double-cast self-join, so a wrong partial sum, a
     float32-product shortcut, or a divide-by-(N-1) slip breaks the hash.
-    The eigendecomposition + projection half of PCA is driver-side
-    fixed-size numpy (convergence-scalar convention) and is pytest-gated
-    against numpy's reference PCA instead.
+    The eigendecomposition half of PCA is the caller's: fixed-size driver
+    numpy over the collected moments (convergence-scalar convention).
 
     Round-5 legs, gate='pqcode'/'pqcent': product quantization
     (embeddings.product_quantize, 4 subspaces x 16 dims, 16 codes, one

@@ -583,7 +583,7 @@ def test_count_min_sketch_mergeable_and_xxhash(spark):
     assert r1 == r2
 
 
-# ------------------------------------------------------------ embedding pca
+# ------------------------------------------------------------ embedding moments
 
 
 def test_embedding_moments_match_numpy(spark):
@@ -609,38 +609,3 @@ def test_embedding_moments_match_numpy(spark):
         for j in range(5):
             assert got[(i, j)] == pytest.approx(C[i, j], abs=1e-12)
     assert len(got) == 1 + 5 + 25
-
-
-def test_pca_project_matches_numpy(spark):
-    """Projections == numpy eigh-based PCA (sign pinned to the largest-|w|
-    entry positive); top-1 component of an elongated cloud captures the
-    long axis; k out of range rejected."""
-    import numpy as np
-
-    from trustfuse_spark.operators.embeddings import pca_project
-
-    rng = np.random.RandomState(11)
-    base = rng.randn(60, 4).astype(np.float64) * np.array([5.0, 1.0, 0.3, 0.1])
-    V = base.astype(np.float32)
-    rows = [(i, [float(x) for x in V[i]]) for i in range(60)]
-    embs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r["vec_id"]: np.array(r["proj"]) for r in pca_project(embs, k=2).collect()}
-
-    V64 = V.astype(np.float64)
-    mu = V64.mean(axis=0)
-    C = (V64.T @ V64) / len(V64) - np.outer(mu, mu)
-    vals, vecs = np.linalg.eigh(C)
-    order = np.argsort(vals)[::-1][:2]
-    W = vecs[:, order]
-    for c in range(2):
-        if W[np.argmax(np.abs(W[:, c])), c] < 0:
-            W[:, c] = -W[:, c]
-    want = (V64 - mu) @ W
-    for i in range(60):
-        assert got[i] == pytest.approx(want[i], abs=1e-9), i
-    # the dominant axis (coord 0, sd 5) should load component 0
-    assert abs(W[0, 0]) > 0.9
-    with pytest.raises(ValueError):
-        pca_project(embs, k=0)
-    with pytest.raises(ValueError):
-        pca_project(embs, k=5)

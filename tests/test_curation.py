@@ -480,36 +480,6 @@ def test_pack_sequences_chunked_carry_cases(spark):
                 assert got[(g, i)] == e, (g, mc)
 
 
-def test_contamination_keep_tiers_agree_and_ceiling(spark):
-    """The literal-array tier and the broadcast-set pandas tier must make
-    the same keep/drop decision; above the broadcast ceiling it refuses
-    (ADVICE r4: no unbounded plan literal on the stream path)."""
-    from trustfuse_spark.operators.curation import contamination_keep
-
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog today"),
-        (1, "completely clean text with no benchmark overlap at all"),
-        (2, "prefix words then the quick brown fox jumps over the lazy dog"),
-        (3, "short doc"),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    grams = ["the quick brown fox jumps over the lazy", "unmatched gram x y z a b c"]
-
-    def run(literal_ceiling):
-        keep = contamination_keep(
-            spark, F.col("text"), grams, n=8, literal_ceiling=literal_ceiling
-        )
-        return sorted(r["doc_id"] for r in df.filter(keep).collect())
-
-    literal = run(10_000)  # literal tier
-    bcast = run(0)  # force the pandas broadcast tier
-    assert literal == bcast == [1, 3, 4]  # contaminated 0/2 dropped, NULL kept
-
-    with pytest.raises(ValueError, match="ceiling"):
-        contamination_keep(spark, F.col("text"), grams, n=8, broadcast_ceiling=1)
-
-
 def test_mixture_plan_zero_token_domain(spark):
     """A domain whose docs carry 0 tokens gets rate 0 / epochs 0 (never
     NULL/inf), and apply_mixture emits nothing for it instead of silently

@@ -1,12 +1,14 @@
-"""Resume-from-checkpoint + streaming sessionization tests."""
+"""Resume-from-checkpoint and table-sink tests."""
 
 import os
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
+from pyspark.sql import SparkSession
 
 from trustfuse_spark.datagen import gen_docs
 from trustfuse_spark.plans.lineage import run_resumable_pipeline
-from trustfuse_spark.streaming.sessions import stream_majority, stream_session_buckets
 
 
 def test_resume_skips_done_stages(spark, tmp_path):
@@ -49,54 +51,6 @@ def test_resume_skips_done_stages(spark, tmp_path):
     assert all(p["file"].endswith(".parquet") for p in tri_rec["partitions"])
 
 
-def test_stream_session_buckets(spark, tmp_path):
-    rows = [
-        ("s1", "A", "p", "v1", "2020-01-01 00:00:00"),
-        ("s1", "A", "p", "v2", "2020-01-02 00:00:00"),
-        ("s1", "A", "p", "v3", "2020-02-01 00:00:00"),  # > 10d gap: new session
-        ("s1", "B", "p", "v1", "2020-01-01 00:00:00"),
-    ]
-    src = spark.createDataFrame(
-        rows, ["source", "entity", "attr", "value_str", "ts_s"]
-    ).withColumn("ts", F.to_timestamp("ts_s"))
-    src.write.mode("overwrite").parquet(str(tmp_path / "claims"))
-    stream = (
-        spark.readStream.schema(src.schema)
-        .parquet(str(tmp_path / "claims"))
-        .select("source", "entity", "attr", "value_str", "ts")
-    )
-    sessions = stream_session_buckets(stream, gap="10 days")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "availableNow drain timed out"
-    out = spark.sql("SELECT * FROM sess_out").collect()
-    per_entity = {}
-    for r in out:
-        per_entity.setdefault(r["entity"], 0)
-        per_entity[r["entity"]] += 1
-    assert per_entity["A"] == 2  # two sessions for A
-    assert per_entity["B"] == 1
-
-    votes = stream_majority(stream, window="30 days")
-    q2 = (
-        votes.writeStream.format("memory")
-        .queryName("votes_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q2.awaitTermination(120), "availableNow drain timed out"
-    vout = spark.sql("SELECT * FROM votes_out").collect()
-    assert sum(r["votes"] for r in vout) == 4
-
-
 def test_sink_seam(spark, tmp_path):
     """ParquetSink roundtrip + the Iceberg seam failing loudly without a
     configured catalog (the sandbox ships no Iceberg runtime)."""
@@ -114,9 +68,31 @@ def test_sink_seam(spark, tmp_path):
         IcebergSink(spark, "iceberg_cat.db")
 
     # the session catalog is reachable (probe table just doesn't exist):
-    # construction succeeds, exists() is a catalog lookup
+    # construction succeeds, exists() is a catalog lookup on the sink's own
+    # session, so it answers from a thread with no active session and
+    # without the deprecated tableExists(table, db) form
     s2 = IcebergSink(spark, "spark_catalog.default")
-    assert s2.exists("no_such_table") is False
+
+    def exists_in_fresh_thread(name):
+        def probe():
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", FutureWarning)
+                assert SparkSession.getActiveSession() is None
+                return s2.exists(name)
+
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            return pool.submit(probe).result()
+
+    assert exists_in_fresh_thread("no_such_table") is False
+    spark.sql(
+        "CREATE TABLE spark_catalog.default.sink_seam_probe (id BIGINT) "
+        f"USING parquet LOCATION '{tmp_path / 'probe'}'"
+    )
+    try:
+        assert exists_in_fresh_thread("sink_seam_probe") is True
+    finally:
+        spark.sql("DROP TABLE spark_catalog.default.sink_seam_probe")
+    assert exists_in_fresh_thread("sink_seam_probe") is False
 
 
 def _iceberg_jar_present() -> bool:
@@ -153,242 +129,3 @@ def test_iceberg_roundtrip_when_runtime_present(spark, tmp_path):
     # snapshot overwrite: createOrReplace is atomic, second write replaces
     sink.write(df.limit(4), "t1")
     assert sink.read(spark, "t1").count() == 4
-
-
-def test_stream_sessionize_stateful_matches_batch(spark, tmp_path):
-    """The applyInPandasWithState sessionizer must reproduce the batch
-    alpha/delta rule EXACTLY, including when the same entity's history is
-    split across micro-batches (state carries the entity clock and every
-    (source, attr) pair clock over the batch boundary)."""
-    import os
-
-    from trustfuse_spark.operators.bucketize import sessionize
-    from trustfuse_spark.streaming.sessions import stream_sessionize_stateful
-
-    DAY = 86_400
-    alpha, delta = 10 * DAY, 100 * DAY
-    # deterministic claim history: per entity, cycle gaps that exercise
-    # within-alpha upsert (no close), pair-gap close, and delta close
-    gaps = [1, 6, 11, 3, 40, 2, 150, 5, 12, 9]  # days
-    rows = []
-    t0 = 1_577_836_800  # 2020-01-01
-    for ent_i, ent in enumerate(["A", "B", "hot"]):
-        n = 40 if ent == "hot" else 12
-        t = t0 + ent_i * 3_600  # desync entities; keep per-entity ts distinct
-        for i in range(n):
-            t += gaps[(i + ent_i) % len(gaps)] * DAY
-            src = f"s{i % 3}"
-            attr = f"p{i % 2}"
-            rows.append((src, ent, attr, f"v{i}", t))
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["source", "entity", "attr", "value_str", "sec"])
-    pdf["ts"] = pd.to_datetime(pdf["sec"], unit="s")
-    pdf = pdf.drop(columns="sec").sort_values("ts", ignore_index=True)
-
-    batch_df = spark.createDataFrame(pdf)
-    expected = {
-        tuple(r)
-        for r in sessionize(batch_df, alpha_s=alpha, delta_s=delta).collect()
-    }
-
-    for n_files in (1, 4):
-        d = tmp_path / f"claims_{n_files}"
-        d.mkdir()
-        chunk = (len(pdf) + n_files - 1) // n_files
-        for k in range(n_files):
-            part = pdf.iloc[k * chunk : (k + 1) * chunk]
-            p = str(d / f"f{k}.parquet")
-            part.to_parquet(p, engine="pyarrow", coerce_timestamps="us")
-            os.utime(p, (t0 + k, t0 + k))  # file-source order = slice order
-        stream = spark.readStream.schema(batch_df.schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(d))
-        q = (
-            stream_sessionize_stateful(stream, alpha_s=alpha, delta_s=delta)
-            .writeStream.format("memory")
-            .queryName(f"sess_state_{n_files}")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_state_{n_files}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180), "availableNow drain timed out"
-        got = {
-            tuple(r)
-            for r in spark.sql(f"SELECT * FROM sess_state_{n_files}").collect()
-        }
-        assert got == expected, f"stream != batch with {n_files} micro-batches"
-
-
-def test_session_fold_core_property():
-    """Property: for ANY claim history and ANY micro-batch split, chaining
-    _session_fold_core equals a naive sequential replay of the batch rule.
-    Pure pandas/numpy — no Spark session involved."""
-    import numpy as np
-
-    from trustfuse_spark.streaming.sessions import _session_fold_core
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    DAY = 86_400
-    alpha, delta = 3 * DAY, 20 * DAY
-
-    @st.composite
-    def history(draw):
-        n = draw(st.integers(min_value=1, max_value=60))
-        gaps = draw(
-            st.lists(
-                st.sampled_from([0, 1, 2 * DAY, 4 * DAY, 21 * DAY, 40 * DAY]),
-                min_size=n, max_size=n,
-            )
-        )
-        # includes pairs any string concatenation would conflate
-        keys = draw(
-            st.lists(
-                st.sampled_from(
-                    [("a", "p"), ("a", "q"), ("b", "p"),
-                     ("a\x00", "p"), ("a", "\x00p"), ("ap", "")]
-                ),
-                min_size=n, max_size=n,
-            )
-        )
-        cuts = draw(st.lists(st.integers(min_value=0, max_value=n),
-                             min_size=0, max_size=4))
-        return gaps, keys, sorted(cuts)
-
-    def naive(tsv, keys):
-        b, last, pair, out = 0, None, {}, []
-        for t, k in zip(tsv, keys):
-            close = 0
-            if last is not None and t - last > delta:
-                close = 1
-            elif k in pair and t - pair[k] > alpha:
-                close = 1
-            b += close
-            out.append(b)
-            last, pair[k] = t, t
-        return out
-
-    @settings(max_examples=200, deadline=None)
-    @given(history())
-    def check(h):
-        gaps, keys, cuts = h
-        tsv = np.cumsum(np.array(gaps, dtype="int64")) + 1_600_000_000
-        expected = naive(tsv, keys)
-        got, state = [], None
-        for lo, hi in zip([0] + cuts, cuts + [len(tsv)]):
-            if hi <= lo:
-                continue
-            buckets, state = _session_fold_core(
-                tsv[lo:hi],
-                np.array([k[0] for k in keys[lo:hi]], dtype=object),
-                np.array([k[1] for k in keys[lo:hi]], dtype=object),
-                state, alpha, delta,
-            )
-            got.extend(int(x) for x in buckets)
-        assert got == expected
-
-    check()
-
-
-def test_stream_claims_ingest_exactly_once(spark, tmp_path):
-    """Streaming docs->claims twins the batch extraction and survives
-    restart + re-trigger without duplicate appends (exactly-once)."""
-    from trustfuse_spark.plans.pipeline import docs_to_claims
-    from trustfuse_spark.streaming.ingest import run_claims_ingest
-
-    docs = gen_docs(spark, 12, 4, 2).cache()
-    first = docs.filter(F.element_at(F.split("doc_id", "_"), -1) == "00")
-    rest = docs.filter(F.element_at(F.split("doc_id", "_"), -1) != "00")
-    in_dir = str(tmp_path / "docs_in")
-    out_dir = str(tmp_path / "claims_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drained(claims_df):
-        cols = ["bucket_id", "source", "entity", "attr", "value_str", "doc_id"]
-        return sorted(tuple(r) for r in claims_df.select(*cols).collect())
-
-    # drop 1: first revision only
-    first.write.mode("append").parquet(in_dir)
-    assert run_claims_ingest(spark, in_dir, out_dir, ckpt).awaitTermination(180)
-    got1 = drained(spark.read.parquet(out_dir))
-    assert got1 == drained(docs_to_claims(first))
-
-    # drop 2: remaining revisions land; same checkpoint resumes and appends
-    # ONLY the new files
-    rest.write.mode("append").parquet(in_dir)
-    assert run_claims_ingest(spark, in_dir, out_dir, ckpt).awaitTermination(180)
-    got2 = drained(spark.read.parquet(out_dir))
-    assert got2 == drained(docs_to_claims(docs))
-
-    # restart with nothing new: the file-source log must yield zero rows
-    assert run_claims_ingest(spark, in_dir, out_dir, ckpt).awaitTermination(180)
-    assert drained(spark.read.parquet(out_dir)) == got2
-
-
-def test_stream_curated_docs_exactly_once(spark, tmp_path):
-    """Streaming curation prefix: PII redaction + quality filter + dedup-
-    within-watermark, exactly-once across staged drops on one checkpoint."""
-    import datetime as dt
-
-    from trustfuse_spark.streaming.curate import run_curated_ingest
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat naps "
-        "and the bird is singing a long morning song near the old barn"
-    )
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "doc_id string, text string, source string, ts timestamp"
-        )
-
-    in_dir = str(tmp_path / "raw_in")
-    out_dir = str(tmp_path / "curated_out")
-    ckpt = str(tmp_path / "ckpt_cur")
-
-    bench = spark.createDataFrame(
-        [("secret held out eval",)], "gram string"
-    )
-
-    # drop 1: a normal doc, a PII doc, a dup of the normal doc (same batch,
-    # inside the watermark horizon), punctuation junk, and a doc containing
-    # a benchmark n-gram
-    mk([
-        ("a", base + " one", "web", t0),
-        ("b", base + " two mail me at bob@corp.example.org now", "web", t0),
-        ("a2", base + " one", "web", t0 + dt.timedelta(minutes=5)),
-        ("junk", "??!! ,,,, ;;;; !!!!", "web", t0),
-        ("leak", base + " with the secret held out eval phrase", "web", t0),
-    ]).write.mode("append").parquet(in_dir)
-    assert run_curated_ingest(
-        spark, in_dir, out_dir, ckpt, min_quality=0.25,
-        benchmark=bench, bench_ngram=4,
-    ).awaitTermination(180)
-    got1 = {r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()}
-    # exactly ONE of the two identical docs survives (which one is batch
-    # arrival order, not part of the contract); junk is quality-dropped
-    kept_dup = set(got1) & {"a", "a2"}
-    assert len(kept_dup) == 1 and set(got1) == kept_dup | {"b"}
-    assert "bob@corp.example.org" not in got1["b"]["text"]
-    assert "<EMAIL>" in got1["b"]["text"]
-
-    # drop 2: same checkpoint resumes; only the new file is processed
-    mk([("c", base + " three", "web", t0 + dt.timedelta(minutes=10))]
-       ).write.mode("append").parquet(in_dir)
-    assert run_curated_ingest(
-        spark, in_dir, out_dir, ckpt, min_quality=0.25,
-        benchmark=bench, bench_ngram=4,
-    ).awaitTermination(180)
-    got2 = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
-    assert got2 == kept_dup | {"b", "c"}
-
-    # re-trigger with nothing new appends nothing
-    assert run_curated_ingest(
-        spark, in_dir, out_dir, ckpt, min_quality=0.25,
-        benchmark=bench, bench_ngram=4,
-    ).awaitTermination(180)
-    assert spark.read.parquet(out_dir).count() == 3

@@ -23,12 +23,8 @@ from trustfuse_spark.operators.dedup import (
     simhash_near_dups,
 )
 from trustfuse_spark.operators.linking import candidate_links, canonicalize
-from trustfuse_spark.operators.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    media_table_from_refs,
-)
-from trustfuse_spark.operators.textstats import doc_stats
+from trustfuse_spark.operators.multimodal import extract_features
+from trustfuse_spark.operators.textstats import lang_id, quality_features, token_count_bpe
 from trustfuse_spark.plans.pipeline import docs_to_claims
 
 
@@ -357,12 +353,21 @@ def test_textstats(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r["doc_id"]: r for r in doc_stats(df).collect()}
+    scored = quality_features(df).select(
+        "doc_id",
+        "n_tokens",
+        "quality_score",
+        lang_id(F.col("text")).alias("lang_pred"),
+        token_count_bpe(F.col("text")).alias("n_tokens_bpe"),
+    )
+    out = {r["doc_id"]: r for r in scored.collect()}
     assert out[1]["lang_pred"] == "en"
     assert out[2]["lang_pred"] == "de"
+    assert out[3]["lang_pred"] == "und"
     assert out[1]["quality_score"] > out[3]["quality_score"]
     assert out[1]["n_tokens"] == 11
-    assert out[1]["fingerprint"] is not None
+    # "!!! ??? ###" is 9 single-symbol BPE-ish tokens, 3 whitespace ones
+    assert out[3]["n_tokens_bpe"] == 9 and out[3]["n_tokens"] == 3
 
 
 def test_ann_brute_vs_ivf(spark):
@@ -382,27 +387,10 @@ def test_ann_brute_vs_ivf(spark):
     assert bf_set == ivf_set
 
 
-def test_multimodal_plumbing(spark):
-    refs = spark.createDataFrame([("mref://1",), ("mref://2",), ("mref://3",)], ["media_ref"])
-    media = media_table_from_refs(refs)
-    assert media.count() == 3
-    feats = extract_features(media, dim=8)
-    rows = feats.collect()
-    assert len(rows) == 3 and all(len(r["feature"]) == 8 for r in rows)
-    # deterministic across runs
-    again = {r["media_ref"]: r["feature"] for r in extract_features(media, dim=8).collect()}
-    for r in rows:
-        assert again[r["media_ref"]] == r["feature"]
-    plan = frame_sample_plan(media, every_ms=10000)
-    assert plan.count() >= 0  # only videos sampled
-    # synthetic payloads carry no decodable magic -> the real path refuses
-    with pytest.raises(Exception):
-        extract_features(media, fake=False).collect()
-
-
 def test_multimodal_real_decode_ppm_bmp(spark):
-    """fake=False really decodes planted PPM (P6) and 24-bit BMP bytes:
-    width/height/channel means come from the pixels, not a stub."""
+    """extract_features really decodes planted PPM (P6) and 24-bit BMP
+    bytes: width/height/channel means come from the pixels, not a stub.
+    Payloads with no known codec raise."""
     import struct
 
     # 2x2 PPM: red, green / blue, white -> each channel mean = 0.5
@@ -424,7 +412,7 @@ def test_multimodal_real_decode_ppm_bmp(spark):
         rows, "media_ref string, media_type string, payload binary, "
               "width int, height int, duration_ms int"
     )
-    out = {r["media_ref"]: r for r in extract_features(media, dim=8, fake=False).collect()}
+    out = {r["media_ref"]: r for r in extract_features(media, dim=8).collect()}
     p = out["p1"]["feature"]
     assert p[0] == 2.0 and p[1] == 2.0 and p[2] == 3.0
     assert abs(p[3] - 0.5) < 1e-6 and abs(p[4] - 0.5) < 1e-6 and abs(p[5] - 0.5) < 1e-6
@@ -432,6 +420,15 @@ def test_multimodal_real_decode_ppm_bmp(spark):
     assert b[0] == 2.0 and b[1] == 1.0
     assert abs(b[3] - 0.5) < 1e-6 and abs(b[4] - 0.0) < 1e-6 and abs(b[5] - 0.5) < 1e-6
     assert out["p1"]["n_frames"] == 1 and out["b1"]["n_frames"] == 1
+
+    # synthetic payloads carry no decodable magic -> the decoder refuses
+    unknown = spark.createDataFrame(
+        [("u1", "image", bytearray(b"payload:u1")), ("v1", "video", bytearray(ppm))],
+        "media_ref string, media_type string, payload binary",
+    )
+    for ref in ("u1", "v1"):
+        with pytest.raises(Exception, match="no dependency-free decoder"):
+            extract_features(unknown.filter(F.col("media_ref") == ref)).collect()
 
 
 def test_graph_edges_degrees_ego(spark):

@@ -567,51 +567,6 @@ class TestZOrder:
         assert all(v == sorted(v) for v in byp.values())
 
 
-class TestCompaction:
-    def test_small_files_compact_to_plan_and_preserve_rows(self, spark, tmp_path):
-        import glob
-
-        from trustfuse_spark.plans.compact import compact_parquet, plan_compaction
-
-        src = str(tmp_path / "small")
-        dst = str(tmp_path / "compacted")
-        df = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(5000)], "id long, v string"
-        )
-        df.repartition(40).write.parquet(src)  # 40 tiny files
-        plan = plan_compaction(spark, src, target_file_bytes=1 << 30)
-        assert plan["n_files"] == 40 and plan["target_files"] == 1
-        executed = compact_parquet(
-            spark, src, dst, target_file_bytes=1 << 30, sort_cols=["id"]
-        )
-        assert executed["target_files"] == 1
-        files = glob.glob(f"{dst}/*.parquet")
-        assert len(files) == 1
-        back = spark.read.parquet(dst)
-        assert back.count() == 5000
-        assert sorted(r["id"] for r in back.collect()) == list(range(5000))
-
-    def test_target_scales_with_bytes(self, spark, tmp_path):
-        import glob
-
-        from trustfuse_spark.plans.compact import compact_parquet
-
-        src = str(tmp_path / "s2")
-        dst = str(tmp_path / "d2")
-        import hashlib
-
-        spark.createDataFrame(
-            [
-                (i, hashlib.sha256(str(i).encode()).hexdigest() * 4)
-                for i in range(20000)
-            ],
-            "id long, v string",
-        ).repartition(20).write.parquet(src)
-        executed = compact_parquet(spark, src, dst, target_file_bytes=200 * 1024)
-        assert executed["target_files"] > 1
-        assert len(glob.glob(f"{dst}/*.parquet")) == executed["target_files"]
-
-
 class TestGroupedHLL:
     def test_per_group_equals_per_filter(self, spark):
         rows = [

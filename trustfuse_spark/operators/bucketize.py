@@ -1,6 +1,6 @@
 """Temporal bucketization — the reference's session-window semantics as
-window expressions (batch over a table; see streaming/sessions.py for the
-Structured Streaming twin).
+window expressions, batch over a table (the reference buckets a finished
+revision history, SURVEY §2.9).
 
 Reference rules (generate_buckets.py:171-270, SURVEY §2.9):
   * a claim opens/extends its entity's current bucket;
@@ -54,8 +54,7 @@ def sessionize(
     (entity, segment) in parallel, and the per-segment bucket counts are
     offset back to the entity-wide numbering. A hot entity with NO
     delta-gaps still serializes — that residue is inherent to the
-    semantics; route it through streaming/sessions.py where the state
-    store bounds per-key memory.
+    semantics.
     """
     if presplit:
         if alpha_s > delta_s:

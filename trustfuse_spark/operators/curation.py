@@ -292,74 +292,6 @@ def decontaminate_bloom(
     return out.withColumn("contaminated", F.col("n_contaminated") > 0)
 
 
-# Row-local decontamination tiers (streaming/curate.py and any append-mode
-# consumer): below _LITERAL_GRAM_CEILING the benchmark set ships as a plan
-# literal (zero Python, but arrays_overlap rebuilds a hash set from the
-# array per ROW, so per-doc cost is O(|benchmark|) — fine for eval suites of
-# a few thousand grams, quadratic-feeling beyond); between the two ceilings
-# it ships once per executor as a broadcast set probed by an Arrow-batched
-# pandas filter at O(|doc grams|) per doc; above _BROADCAST_GRAM_CEILING the
-# helper refuses — a set that size isn't an eval suite, run the batch
-# `decontaminate` (broadcast hash JOIN, still no corpus shuffle) over closed
-# partitions instead.
-_LITERAL_GRAM_CEILING = 10_000
-_BROADCAST_GRAM_CEILING = 20_000_000
-
-
-def contamination_keep(
-    spark,
-    text: Column,
-    grams: list[str],
-    n: int = 8,
-    literal_ceiling: int = _LITERAL_GRAM_CEILING,
-    broadcast_ceiling: int = _BROADCAST_GRAM_CEILING,
-) -> Column:
-    """Boolean keep-column: true iff the doc shares NO word ``n``-gram with
-    ``grams``. Row-local (no aggregation), so it is legal in streaming
-    append mode; tier chosen by |grams| (see the ceiling constants above).
-    NULL text is KEPT on both tiers (it has no grams, so it cannot be
-    contaminated — `word_ngrams` folds NULL to an empty array; NULL/empty
-    handling belongs to the upstream quality filter)."""
-    if len(grams) > broadcast_ceiling:
-        raise ValueError(
-            f"benchmark gram set of {len(grams)} exceeds the row-local "
-            f"decontamination ceiling ({broadcast_ceiling}); run the batch "
-            "decontaminate() sweep over closed partitions instead"
-        )
-    if len(grams) <= literal_ceiling:
-        return F.coalesce(
-            ~F.arrays_overlap(word_ngrams(text, n), F.lit(grams)),
-            F.lit(True),  # belt: an unexpected NULL comparison keeps the doc
-        )
-
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BooleanType
-
-    bc = spark.sparkContext.broadcast(frozenset(grams))
-    ws = re.compile(r"\s+")
-
-    @pandas_udf(BooleanType())
-    def _keep(texts: pd.Series) -> pd.Series:
-        bench = bc.value
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(True)  # no grams -> cannot be contaminated
-                continue
-            toks = [w for w in ws.split(t.lower()) if w]
-            out.append(
-                not any(
-                    " ".join(toks[i : i + n]) in bench
-                    for i in range(len(toks) - n + 1)
-                )
-            )
-        return pd.Series(out)
-
-    return _keep(text)
-
-
 def pii_scan(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Count PII-shaped spans per document (``n_email`` / ``n_ipv4`` /
     ``n_phone`` / ``n_ccnum``) — pure regexp expressions, no UDFs; the

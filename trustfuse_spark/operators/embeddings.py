@@ -1,25 +1,21 @@
-"""Distributed embedding statistics: mean/covariance moments and PCA
-projection.
+"""Distributed embedding statistics: mean/covariance moments, and product
+quantization with its ADC scan and candidate blocking.
 
 SemDeDup-style semantic pipelines (dedup.semantic_dedup, ann.py IVF) get
 materially better cells from decorrelated, variance-ordered coordinates;
 PCA is also the standard dimensionality-reduction step before ANN indexing
-at 10^12-vector scale. The decomposition splits cleanly into a distributed
-part and a driver part:
+at 10^12-vector scale. Its corpus-scale half is the moments:
 
-- **Moments** (the corpus-scale work): E[x], E[x x^T] via per-partition
-  numpy partials inside ``mapInPandas`` — each Arrow batch contributes ONE
-  (d + d^2 + 1)-value partial (vector sum, flattened outer-product sum,
-  count) regardless of batch size, and the partials hash-agg (map-side
-  combined) down to d^2 + d + 1 cells. The corpus is read once; nothing
-  per-row ever shuffles.
-- **Eigendecomposition** (the driver part): the covariance is a d x d
+- **Moments**: E[x], E[x x^T] via per-partition numpy partials inside
+  ``mapInPandas`` — each Arrow batch contributes ONE (d + d^2 + 1)-value
+  partial (vector sum, flattened outer-product sum, count) regardless of
+  batch size, and the partials hash-agg (map-side combined) down to
+  d^2 + d + 1 cells. The corpus is read once; nothing per-row ever
+  shuffles.
+- **Eigendecomposition** is the caller's: the covariance is a d x d
   matrix — fixed-size, data-independent — so ``numpy.linalg.eigh`` on the
   collected moments is the documented convergence-scalar convention (the
-  same boundary the fusion loops and IVF centroids use), not a
-  driver-side-loop smell.
-- **Projection** (map again): each Arrow batch does one ``V @ W`` matmul
-  (the embedding-sketch pattern, dedup.py) — stateless, zero shuffles.
+  same boundary the fusion loops and IVF centroids use).
 
 Float contract: float32 inputs are widened to float64 BEFORE any product
 on both the engine and the oracle side; moment values are rounded to 6 dp
@@ -116,57 +112,6 @@ def embedding_moments(embs: DataFrame, vec_col: str = "embedding") -> DataFrame:
         F.col("n").alias("value"),
     )
     return cnt.unionByName(mean).unionByName(cov)
-
-
-def pca_project(
-    embs: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    moments: DataFrame | None = None,
-) -> DataFrame:
-    """Project embeddings onto their top-``k`` principal components
-    (eigenvectors of the `embedding_moments` covariance, eigenvalue-desc;
-    each component's sign pinned so its largest-|coordinate| entry is
-    positive — eigh's sign is otherwise arbitrary).
-
-    The d x d eigendecomposition runs on the driver (fixed-size — the
-    convergence-scalar convention); the projection ``(V - mu) @ W`` is one
-    numpy matmul per Arrow batch. Returns (id, proj array<double>).
-    """
-    mom = (moments if moments is not None else embedding_moments(embs, vec_col)).collect()
-    mean_map = {r["i"]: r["value"] for r in mom if r["j"] == -1 and r["i"] >= 0}
-    d = len(mean_map)
-    if not 1 <= k <= d:
-        raise ValueError(f"k must be in [1, {d}], got {k}")
-    mu = np.array([mean_map[i] for i in range(d)])
-    C = np.zeros((d, d))
-    for r in mom:
-        if r["i"] >= 0 and r["j"] >= 0:
-            C[r["i"], r["j"]] = r["value"]
-    vals, vecs = np.linalg.eigh(C)
-    order = np.argsort(vals)[::-1][:k]
-    W = vecs[:, order]
-    for c in range(k):
-        if W[np.argmax(np.abs(W[:, c])), c] < 0:
-            W[:, c] = -W[:, c]
-
-    schema = StructType(
-        [
-            StructField(id_col, embs.schema[id_col].dataType),
-            StructField("proj", ArrayType(DoubleType())),
-        ]
-    )
-
-    def _proj(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            P = (V - mu) @ W
-            yield pd.DataFrame({id_col: pdf[id_col], "proj": list(P)})
-
-    return embs.select(id_col, vec_col).mapInPandas(_proj, schema)
 
 
 def product_quantize(

@@ -1,20 +1,15 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed by Arrow-batched mapInPandas stages.
+"""Multimodal column plumbing: image/audio/video as opaque binary payload
+columns tagged with their media type, decoded by Arrow-batched mapInPandas
+stages.
 
-The decode step has two real paths and one stub:
-  * fake=True — deterministic pseudo-features from the payload bytes
-    (plumbing tests / synthetic corpora);
-  * fake=False — a dependency-free REAL image decode for PPM (P6) and
-    uncompressed 24-bit BMP payloads (header parse + numpy pixel stats;
-    no image library needed), so the production path is exercised end to
-    end on genuine bytes;
-  * anything else (JPEG/PNG/audio/video codecs) raises NotImplementedError
-    — those decoders need libraries absent from this environment.
-The Spark-side plumbing — schemas, Arrow batch iteration, partition-size
-control, carrying media alongside text spans — is identical on every path
-(the reference routes media properties out of fusion,
-generate_buckets.py:81-133; here they become first-class columns instead
-of being dropped).
+The decode is a dependency-free REAL image decode for PPM (P6) and
+uncompressed 24-bit BMP payloads (header parse + numpy pixel stats; no
+image library needed), so the production path runs end to end on genuine
+bytes. Anything else (JPEG/PNG/audio/video codecs) raises
+NotImplementedError — those decoders need libraries absent from this
+environment. The reference routes media properties out of fusion
+(generate_buckets.py:81-133); here they become first-class columns instead
+of being dropped.
 """
 
 from __future__ import annotations
@@ -24,19 +19,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -46,23 +29,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("n_frames", T.IntegerType()),
     ]
 )
-
-
-def media_table_from_refs(docs_media: DataFrame) -> DataFrame:
-    """Synthesize the opaque media table from media_refs (deterministic
-    payload bytes derived from the ref hash — stand-in for object storage)."""
-    h = F.xxhash64("media_ref")
-    return docs_media.select("media_ref").distinct().select(
-        "media_ref",
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.pmod(h, F.lit(3)) + 1).cast("int"),
-        ).alias("media_type"),
-        F.encode(F.concat(F.lit("payload:"), "media_ref"), "utf-8").alias("payload"),
-        (F.pmod(h, F.lit(1024)) + 16).cast("int").alias("width"),
-        (F.pmod(h, F.lit(768)) + 16).cast("int").alias("height"),
-        (F.pmod(h, F.lit(60000)) + 1000).cast("int").alias("duration_ms"),
-    )
 
 
 def decode_ppm_p6(buf: bytes) -> tuple[int, int, "np.ndarray"] | None:
@@ -137,31 +103,19 @@ def _image_feature(buf: bytes, dim: int) -> tuple[list[float], int, int, int] | 
     return feat, w, h, 1
 
 
-def extract_features(
-    media: DataFrame, dim: int = 16, batch_hint: int = 1024, fake: bool = True
-) -> DataFrame:
-    """Decode + feature-extract via mapInPandas.
-
-    fake=True: deterministic pseudo-features from the payload bytes (the
-    Spark contract — schema, Arrow batching, per-batch vectorization — is
-    identical to the real decoder). fake=False: REAL decode for PPM (P6)
-    and uncompressed 24-bit BMP image payloads (dependency-free, tested on
-    planted bytes); payloads in any other format raise NotImplementedError
-    (their codecs need libraries absent from this environment).
+def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
+    """Decode + feature-extract via mapInPandas over (media_ref,
+    media_type, payload) rows: REAL decode for PPM (P6) and uncompressed
+    24-bit BMP image payloads (dependency-free, tested on planted bytes);
+    payloads in any other format raise NotImplementedError (their codecs
+    need libraries absent from this environment).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, frames = [], []
             for payload, mtype in zip(pdf["payload"], pdf["media_type"]):
-                buf = bytes(payload)
-                if fake:
-                    arr = np.frombuffer(buf, dtype=np.uint8)
-                    rng = np.resize(arr.astype(np.float32), dim)
-                    feats.append((rng / 255.0).tolist())
-                    frames.append(int(arr[:4].sum() % 32) + 1)
-                    continue
-                decoded = _image_feature(buf, dim) if mtype == "image" else None
+                decoded = _image_feature(bytes(payload), dim) if mtype == "image" else None
                 if decoded is None:
                     raise NotImplementedError(
                         f"no dependency-free decoder for media_type={mtype!r} "
@@ -181,18 +135,3 @@ def extract_features(
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for videos: one row per sampled timestamp —
-    pure expressions (the decode of each frame would run in
-    extract_features)."""
-    return (
-        media.filter(F.col("media_type") == "video")
-        .select(
-            "media_ref",
-            F.explode(
-                F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-            ).alias("sample_ms"),
-        )
-    )

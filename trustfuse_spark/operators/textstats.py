@@ -1,8 +1,7 @@
 """Text-analysis operators for training-data pipelines.
 
 All pure Spark expressions (JVM-side, codegen'd): language ID (stopword
-n-gram heuristic), quality scoring, token counting (whitespace + BPE-ish
-regex), rolling-hash document fingerprinting.
+n-gram heuristic), quality scoring, BPE-ish regex token counting.
 """
 
 from __future__ import annotations
@@ -25,10 +24,6 @@ _TOKEN_RE = r"[A-Za-z]+|\d+|[^\sA-Za-z\d]"
 def tokens_ws(text: Column) -> Column:
     """Whitespace token array."""
     return F.filter(F.split(text, r"\s+"), lambda t: t != "")
-
-
-def token_count_ws(text: Column) -> Column:
-    return F.size(tokens_ws(text))
 
 
 def token_count_bpe(text: Column) -> Column:
@@ -88,25 +83,3 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         + (1.0 - F.col("repetition_ratio")) * 0.2
     )
     return out.withColumn("quality_score", F.round(score, 6))
-
-
-def fingerprint(text: Column, window: int = 8) -> Column:
-    """Winnowing-style document fingerprint: min rolling hash over token
-    windows — stable under whitespace normalization."""
-    toks = tokens_ws(F.lower(text))
-    n = F.size(toks)
-    starts = F.sequence(F.lit(0), F.greatest(n - window, F.lit(0)))
-    window_hashes = F.transform(
-        starts, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, window)))
-    )
-    return F.array_min(window_hashes)
-
-
-def doc_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-stop: lang, token counts, quality features, fingerprint."""
-    out = quality_features(df, text_col)
-    return (
-        out.withColumn("lang_pred", lang_id(F.col(text_col)))
-        .withColumn("n_tokens_bpe", token_count_bpe(F.col(text_col)))
-        .withColumn("fingerprint", fingerprint(F.col(text_col)))
-    )

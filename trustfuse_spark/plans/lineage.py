@@ -64,6 +64,7 @@ class IcebergSink:
     """
 
     def __init__(self, spark: SparkSession, namespace: str) -> None:
+        self.spark = spark
         self.namespace = namespace
         try:
             spark.sql(f"SELECT 1 FROM {namespace}.__probe__ LIMIT 0")
@@ -79,10 +80,9 @@ class IcebergSink:
         return f"{self.namespace}.{name}"
 
     def exists(self, name: str) -> bool:
-        parts = self._table(name).rsplit(".", 1)
-        return bool(
-            SparkSession.getActiveSession().catalog.tableExists(parts[1], parts[0])
-        )
+        # the sink's own session: the active one is per thread, and None in
+        # a thread that never set one
+        return self.spark.catalog.tableExists(self._table(name))
 
     def write(self, df: DataFrame, name: str, partition_by: tuple[str, ...] = ()) -> None:
         writer = df.writeTo(self._table(name))
