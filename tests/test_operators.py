@@ -387,10 +387,43 @@ def test_ann_brute_vs_ivf(spark):
     assert bf_set == ivf_set
 
 
+def test_multimodal_plumbing(spark):
+    """extract_features keeps one row per media ref, carries media_ref and
+    media_type through, emits fixed-dim features deterministically, and
+    refuses payloads it has no decoder for."""
+    ppm = b"P6\n1 1\n255\n"
+    rows = [
+        (f"mref://{i}", "image", bytearray(ppm + bytes([10 * i, 20 * i, 30 * i])))
+        for i in (1, 2, 3)
+    ]
+    media = spark.createDataFrame(rows, "media_ref string, media_type string, payload binary")
+    feats = extract_features(media, dim=8)
+    got = feats.collect()
+    assert len(got) == 3 and all(len(r["feature"]) == 8 for r in got)
+    assert {r["media_ref"] for r in got} == {f"mref://{i}" for i in (1, 2, 3)}
+    assert all(r["media_type"] == "image" for r in got)
+    # features zero-pad past the 7 decoded stats; a wider dim only adds padding
+    assert all(r["feature"][7] == 0.0 for r in got)
+    wide = {r["media_ref"]: r["feature"] for r in extract_features(media, dim=10).collect()}
+    # deterministic across runs
+    again = {r["media_ref"]: r["feature"] for r in extract_features(media, dim=8).collect()}
+    for r in got:
+        assert again[r["media_ref"]] == r["feature"]
+        assert wide[r["media_ref"]][:8] == r["feature"]
+
+    # synthetic payloads carry no decodable magic -> the decoder refuses
+    unknown = spark.createDataFrame(
+        [("u1", "image", bytearray(b"payload:u1")), ("v1", "video", bytearray(ppm))],
+        "media_ref string, media_type string, payload binary",
+    )
+    for ref in ("u1", "v1"):
+        with pytest.raises(Exception, match="no dependency-free decoder"):
+            extract_features(unknown.filter(F.col("media_ref") == ref)).collect()
+
+
 def test_multimodal_real_decode_ppm_bmp(spark):
     """extract_features really decodes planted PPM (P6) and 24-bit BMP
-    bytes: width/height/channel means come from the pixels, not a stub.
-    Payloads with no known codec raise."""
+    bytes: width/height/channel means come from the pixels, not a stub."""
     import struct
 
     # 2x2 PPM: red, green / blue, white -> each channel mean = 0.5
@@ -420,15 +453,6 @@ def test_multimodal_real_decode_ppm_bmp(spark):
     assert b[0] == 2.0 and b[1] == 1.0
     assert abs(b[3] - 0.5) < 1e-6 and abs(b[4] - 0.0) < 1e-6 and abs(b[5] - 0.5) < 1e-6
     assert out["p1"]["n_frames"] == 1 and out["b1"]["n_frames"] == 1
-
-    # synthetic payloads carry no decodable magic -> the decoder refuses
-    unknown = spark.createDataFrame(
-        [("u1", "image", bytearray(b"payload:u1")), ("v1", "video", bytearray(ppm))],
-        "media_ref string, media_type string, payload binary",
-    )
-    for ref in ("u1", "v1"):
-        with pytest.raises(Exception, match="no dependency-free decoder"):
-            extract_features(unknown.filter(F.col("media_ref") == ref)).collect()
 
 
 def test_graph_edges_degrees_ego(spark):
