@@ -19,7 +19,8 @@ Arrow batch in numpy, so the doubles are bit-identical.
 
 Zero-norm rule. The cosine of a pair in which either vector has norm 0 is
 NULL, in both `cosine` and `_cosine_ltr`: no divide-by-zero under ANSI
-mode, and a ``>= threshold`` filter drops the pair.
+mode, and a ``>= threshold`` filter drops the pair. The top-k searches drop
+NULL-cosine pairs before ranking, so a zero-vector query gets no rows.
 
 Everything else is expression-level. At 100 TB the candidate side stays
 partitioned; only centroids and queries broadcast.
@@ -118,6 +119,17 @@ def subspaces(vec_col: str, n_sub: int, sub_dim: int) -> Column:
     )
 
 
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """The k best-scored candidates per query (ties -> smaller candidate
+    id). A NULL cosine (a zero vector on either side) has no rank."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
+    return (
+        sims.filter(F.col("cosine").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -150,11 +162,7 @@ def brute_force_topk(
         "cid",
         cosine(F.col("qv"), F.col("cv")).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(sims, k)
 
 
 def _centroid_literal(cent_rows: list[list[float]]) -> Column:
@@ -318,5 +326,4 @@ def ivf_topk(
         "cid",
         cosine(F.col("qv"), F.col("cv")).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(sims, k)

@@ -3,24 +3,54 @@ per-partition lineage + metrics).
 
 Stage boundaries are table writes: locally parquet under a run directory;
 on a cluster the same calls write Iceberg snapshots (writeTo(...).append()).
-Each completed stage appends a lineage record with per-partition row counts
-and wall time; `resume` replays the pipeline skipping stages whose output
-table + lineage record already exist — mid-run kill -> rerun picks up after
-the last complete stage, byte-identical outputs (generators and operators
-are deterministic; SURVEY §5.3.4).
+Each written table gets a lineage record with per-file row counts, wall
+time and the table's read schema. A boundary costs its write and nothing
+more: the counts come from the commit itself (the Parquet footers, or the
+Iceberg ``files`` metadata table's ``record_count``), not from a re-scan,
+and the schema is the written frame's, so the read-back infers nothing.
+`resume` replays the pipeline skipping stages whose output table + lineage
+record already exist — mid-run kill -> rerun picks up after the last
+complete stage, byte-identical outputs (generators and operators are
+deterministic; SURVEY §5.3.4).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from trustfuse_spark.operators.fusion.base import owned
+
+
+def _nullable(t: DataType) -> DataType:
+    """`t` with every field, element and value nullable: the schema a file
+    source read gives back, whatever the writer declared."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def read_schema(df: DataFrame, partition_by: tuple[str, ...]) -> StructType:
+    """The schema of `df` read back from a table written partitioned by
+    `partition_by`: partition columns last, as partition discovery puts
+    them, and everything nullable."""
+    fields = [f for f in df.schema if f.name not in partition_by]
+    fields += [df.schema[c] for c in partition_by]
+    return _nullable(StructType(fields))
 
 
 class ParquetSink:
@@ -42,13 +72,22 @@ class ParquetSink:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.location(name))
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.location(name))
+    def read(self, spark: SparkSession, name: str, schema: StructType) -> DataFrame:
+        return spark.read.schema(schema).parquet(self.location(name))
 
-    def file_key(self, file_uri: str, name: str) -> str:
-        return os.path.relpath(
-            file_uri.removeprefix("file://"), self.location(name)
+    def file_rows(self, name: str) -> list[tuple[str, int]]:
+        """(path relative to the table, rows) per written file, in path
+        order, from each file's footer on the driver: no Spark job."""
+        loc = self.location(name)
+        paths = sorted(
+            os.path.join(d, f)
+            for d, _, files in os.walk(loc)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
+        return [
+            (os.path.relpath(p, loc), pq.read_metadata(p).num_rows) for p in paths
+        ]
 
 
 class IcebergSink:
@@ -90,11 +129,19 @@ class IcebergSink:
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         writer.createOrReplace()  # atomic snapshot commit
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(self, spark: SparkSession, name: str, schema: StructType) -> DataFrame:
+        # the catalog holds the table's schema: `schema` is not needed
         return spark.read.table(self._table(name))
 
-    def file_key(self, file_uri: str, name: str) -> str:
-        return file_uri.rsplit("/", 1)[-1]
+    def file_rows(self, name: str) -> list[tuple[str, int]]:
+        """(file name, rows) per data file of the current snapshot, from
+        the ``files`` metadata table's ``record_count``."""
+        rows = self.spark.sql(
+            f"SELECT file_path, record_count FROM {self._table(name)}.files"
+        ).collect()
+        return sorted(
+            (r["file_path"].rsplit("/", 1)[-1], r["record_count"]) for r in rows
+        )
 
 
 @dataclass
@@ -112,71 +159,94 @@ class StageRun:
     def _lineage_path(self) -> str:
         return os.path.join(self.root, self.run_id, "_lineage")
 
+    def _record(self, name: str) -> dict | None:
+        """The table's lineage record, or None when it is missing, does not
+        parse, or carries no read schema."""
+        try:
+            with open(os.path.join(self._lineage_path(), f"{name}.json")) as fh:
+                rec = json.load(fh)
+        except (OSError, ValueError):
+            return None
+        return rec if isinstance(rec, dict) and "schema" in rec else None
+
     def is_done(self, stage: str) -> bool:
-        """Done = output table committed AND its lineage record exists. A
-        kill between the table commit and the lineage append must re-run
+        """Done = output table committed AND its lineage record is whole. A
+        kill between the table commit and the record's replace must re-run
         the stage (writes are idempotent overwrite/replace) — the table
-        alone would resume a stage with no lineage record."""
-        return self.sink.exists(stage) and os.path.exists(
-            os.path.join(self._lineage_path(), f"{stage}.json")
-        )
+        alone would resume a stage with no lineage record or read schema."""
+        return self.sink.exists(stage) and self._record(stage) is not None
 
     def materialize(self, stage: str, df_fn, partition_by: tuple[str, ...] = ()) -> DataFrame:
         """Run df_fn() -> DataFrame unless the stage output already exists;
         either way return the stage's table (reading back from storage, so
         downstream lineage starts at the table boundary — the resume point).
         Checkpoints and caches taken for the stage are freed once written.
+
+        The read-back is the only one, and it takes the schema stored in the
+        lineage record, so it runs no inference job; the record's per-file
+        counts come from the write's commit (see `write`).
         """
-        if not self.is_done(stage):
+        rec = self._record(stage) if self.sink.exists(stage) else None
+        if rec is None:
             t0 = time.perf_counter()
             with owned():
-                self.sink.write(df_fn(), stage, partition_by)
-            wall_ms = int((time.perf_counter() - t0) * 1000)
-            out = self.sink.read(self.spark, stage)
-            # file-level lineage: rows per WRITTEN file (input_file_name of
-            # the read-back scan), not spark_partition_id of the read split —
-            # the read planner may coalesce/split files differently
-            parts = (
-                out.groupBy(F.input_file_name().alias("file"))
-                .count()
-                .collect()
-            )
-            self._append_lineage(
-                stage,
-                wall_ms,
-                rows=sum(r["count"] for r in parts),
-                partitions=[
-                    (self.sink.file_key(r["file"], stage), r["count"])
-                    for r in parts
-                ],
-            )
+                rec = self.write(df_fn(), stage, partition_by, t0)
         self.stages_done.append(stage)
-        return self.sink.read(self.spark, stage)
+        return self.sink.read(self.spark, stage, StructType.fromJson(rec["schema"]))
 
-    def _append_lineage(self, stage: str, wall_ms: int, rows: int, partitions) -> None:
-        os.makedirs(self._lineage_path(), exist_ok=True)
+    def write(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: tuple[str, ...] = (),
+        t0: float | None = None,
+    ) -> dict:
+        """Write one table through the sink and replace its lineage record;
+        returns the record. Rows per WRITTEN file come from the commit
+        (sink.file_rows), and the read schema is `df`'s fields with the
+        partition columns last (`read_schema`)."""
+        t0 = time.perf_counter() if t0 is None else t0
+        self.sink.write(df, name, partition_by)
+        wall_ms = int((time.perf_counter() - t0) * 1000)
+        schema = read_schema(df, partition_by)
+        files = self.sink.file_rows(name)
         rec = {
             "run_id": self.run_id,
-            "stage": stage,
-            "rows": rows,
+            "stage": name,
+            "rows": sum(n for _, n in files),
             "wall_ms": wall_ms,
-            "partitions": [{"file": p, "rows": n} for p, n in partitions],
+            "partitions": [{"file": p, "rows": n} for p, n in files],
+            "schema": schema.jsonValue(),
             "ts": time.time(),
         }
-        with open(
-            os.path.join(self._lineage_path(), f"{stage}.json"), "w"
-        ) as fh:
-            json.dump(rec, fh)
+        self._save(name, rec)
+        return rec
+
+    def _save(self, name: str, rec: dict) -> None:
+        """Temp file in the same directory, then os.replace: a kill leaves
+        the old record or the new one, never a truncated one."""
+        path = self._lineage_path()
+        os.makedirs(path, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=path, prefix=f".{name}.", suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(rec, fh)
+            os.replace(tmp, os.path.join(path, f"{name}.json"))
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     def lineage(self) -> list[dict]:
+        """The whole lineage records, in table-name order."""
         path = self._lineage_path()
         if not os.path.isdir(path):
             return []
-        out = []
-        for name in sorted(os.listdir(path)):
-            with open(os.path.join(path, name)) as fh:
-                out.append(json.load(fh))
-        return out
+        recs = (
+            self._record(name.removesuffix(".json"))
+            for name in sorted(os.listdir(path))
+            if name.endswith(".json")
+        )
+        return [r for r in recs if r is not None]
 
 
 def run_resumable_pipeline(
@@ -207,10 +277,9 @@ def run_resumable_pipeline(
 
     def _fuse_truth():
         res = fuse(claims, model=model, **fuse_kwargs)
-        # stash weights alongside (second table in the same stage)
-        res.weights.write.mode("overwrite").parquet(
-            os.path.join(root, run_id, "weights")
-        )
+        # weights: a second table of the stage, with its own record, written
+        # inside the stage's owned() scope while the fusion output is live
+        run.write(res.weights, "weights")
         return res.truth
 
     truth = run.materialize("truth", _fuse_truth, partition_by=("bucket_id",))
