@@ -2,16 +2,17 @@
 per-partition lineage + metrics).
 
 Stage boundaries are table writes: locally parquet under a run directory;
-on a cluster the same calls write Iceberg snapshots (writeTo(...).append()).
-Each written table gets a lineage record with per-file row counts, wall
-time and the table's read schema. A boundary costs its write and nothing
-more: the counts come from the commit itself (the Parquet footers, or the
-Iceberg ``files`` metadata table's ``record_count``), not from a re-scan,
-and the schema is the written frame's, so the read-back infers nothing.
-`resume` replays the pipeline skipping stages whose output table + lineage
-record already exist — mid-run kill -> rerun picks up after the last
-complete stage, byte-identical outputs (generators and operators are
-deterministic; SURVEY §5.3.4).
+on a cluster the same calls commit Iceberg snapshots
+(writeTo(...).createOrReplace()). Each written table gets a lineage record
+with per-file row counts, wall time and the table's read schema. A
+boundary costs its write and nothing more: the counts come from the commit
+itself (the Parquet footers, or the Iceberg ``files`` metadata table's
+``record_count``), not from a re-scan, and the schema is the written
+frame's, so the read-back infers nothing. `resume` replays the pipeline
+skipping stages whose output table + lineage record already exist —
+mid-run kill -> rerun picks up after the last complete stage,
+byte-identical outputs (generators and operators are deterministic;
+SURVEY §5.3.4).
 """
 
 from __future__ import annotations
@@ -167,7 +168,7 @@ class StageRun:
                 rec = json.load(fh)
         except (OSError, ValueError):
             return None
-        return rec if isinstance(rec, dict) and "schema" in rec else None
+        return rec if "schema" in rec else None
 
     def is_done(self, stage: str) -> bool:
         """Done = output table committed AND its lineage record is whole. A
