@@ -143,9 +143,9 @@ def test_presence_intervals(spark):
 PATHS = {"local": 10**9, "distributed": -1}
 
 
-def _components(monkeypatch, path, edges, **kwargs):
+def _components(monkeypatch, path, edges):
     monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", PATHS[path])
-    return {r["node"]: r["component"] for r in connected_components(edges, **kwargs).collect()}
+    return {r["node"]: r["component"] for r in connected_components(edges).collect()}
 
 
 @pytest.mark.parametrize("path", PATHS)
@@ -157,8 +157,6 @@ def test_connected_components(spark, monkeypatch, path):
     )
     comp = _components(monkeypatch, path, edges)
     assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 5, 9: 9, 10: 9}
-    # salted variant identical
-    assert _components(monkeypatch, path, edges, salt_hubs=True) == comp
     assert _components(monkeypatch, path, edges.limit(0)) == {}
 
 

@@ -46,6 +46,21 @@ def test_arrow_extractor_matches_native(spark, docs):
     assert b.exceptAll(a).count() == 0
 
 
+@pytest.mark.parametrize("use_arrow_udf", [False, True])
+def test_malformed_doc_id_yields_no_claims(spark, use_arrow_udf):
+    """A doc_id that is not three `_` pieces ending in an integer gives no
+    claims, as an unparseable span does, rather than aborting the stage
+    (`doc1`) or filing the claim under its source number (`d000001_0003`)."""
+    span = "struct('text' as kind, 'E1 | P_qty | 5 m' as text, '' as media_ref, 0 as offset)"
+    docs = spark.createDataFrame(
+        [("doc1",), ("d000001_0003",), ("d000001_0003_x1",), ("d000001_0003_01",)], "doc_id string"
+    ).withColumn("spans", F.expr(f"array({span})"))
+    rows = docs_to_claims(docs, use_arrow_udf=use_arrow_udf).collect()
+    assert [(r["doc_id"], r["bucket_id"], r["source"]) for r in rows] == [
+        ("d000001_0003_01", 1, "src_0003")
+    ]
+
+
 def _pr(spark, docs, gt, model, **kw):
     triples, result = run_pipeline(docs, model=model, **kw)
     claims = docs_to_claims(docs)

@@ -538,34 +538,6 @@ class TestZOrder:
 
         assert all(got[(a, b)] == interleave(a, b) for (a, b) in got)
 
-    def test_clustering_tightens_both_ranges(self, spark):
-        from trustfuse_spark.operators.zorder import cluster_by_zorder
-
-        rows = [((i * 131) % 1024, (i * 197) % 1024) for i in range(4096)]
-        df = spark.createDataFrame(rows, "a long, b long")
-        out = cluster_by_zorder(df, "a", "b", bits=10, num_partitions=16)
-        spans = (
-            out.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(
-                (F.max("a") - F.min("a")).alias("sa"),
-                (F.max("b") - F.min("b")).alias("sb"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        # every partition's span in EACH dimension is far below the full
-        # 0..1023 domain (a single-key sort would leave the other at ~1023)
-        avg_sa = sum(r["sa"] for r in spans) / len(spans)
-        avg_sb = sum(r["sb"] for r in spans) / len(spans)
-        assert avg_sa < 600 and avg_sb < 600, (avg_sa, avg_sb)
-        # and the z-values are sorted within partitions
-        first = out.withColumn("pid", F.spark_partition_id()).collect()
-        byp = {}
-        for r in first:
-            byp.setdefault(r["pid"], []).append(r["zval"])
-        assert all(v == sorted(v) for v in byp.values())
-
 
 class TestGroupedHLL:
     def test_per_group_equals_per_filter(self, spark):

@@ -26,10 +26,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trustfuse_spark.functions.preprocess import normalize_claim_value
 from trustfuse_spark.operators.evaluation import evaluate, overall
 from trustfuse_spark.operators.fusion.base import FusionResult
-from trustfuse_spark.plans.pipeline import MODELS, truth_to_triples
+from trustfuse_spark.plans import pipeline
 from trustfuse_spark.sources.loaders import load_bucket_dir, load_tsv_bucket, wide_to_long
 
 
@@ -43,7 +42,7 @@ def register_model(name: str, fn: Callable[..., FusionResult]) -> None:
     each step, frees old generations and applies the stop test), then build
     the result from the final state.
     """
-    MODELS[name] = fn
+    pipeline.MODELS[name] = fn
 
 
 @dataclass
@@ -77,38 +76,31 @@ class ClaimsDataset:
 
     # -- stages -------------------------------------------------------------
     def preprocess(self) -> "ClaimsDataset":
-        """Typed normalization: attach claim_type from attr_types (default
-        'string' — untyped attrs fuse categorically, model.py:159-165),
-        derive value_num, trim strings, drop unparseable numeric cells."""
+        """Typed normalization (``pipeline.typed_claims``), claim_type from
+        attr_types when given; an attr it does not name is 'string'."""
         c = self.claims
         if self.attr_types:
             mapping = F.create_map(
                 *[F.lit(x) for kv in self.attr_types.items() for x in kv]
             )
-            c = c.withColumn("claim_type", F.coalesce(mapping[F.col("attr")], F.lit("string")))
+            c = c.withColumn("claim_type", mapping[F.col("attr")])
         elif "claim_type" not in c.columns:
-            c = c.withColumn("claim_type", F.lit("string"))
-        c = c.withColumn("value_str", F.trim("value_str"))
-        c = c.withColumn("value_num", normalize_claim_value(F.col("value_str"), F.col("claim_type")))
-        numeric = F.col("claim_type").isin("quantity", "time")
-        c = c.filter(~(numeric & F.col("value_num").isNull()))
-        return ClaimsDataset(c, self.gt, self.attr_types)
+            c = c.withColumn("claim_type", F.lit(None).cast("string"))
+        return ClaimsDataset(pipeline.typed_claims(c), self.gt, self.attr_types)
 
     def fuse(self, model: str = "crh", **kwargs) -> FusionResult:
-        try:
-            fn = MODELS[model]
-        except KeyError:
-            raise ValueError(f"unknown model {model!r}; available: {sorted(MODELS)}")
         if any(str(t).lower() == "coordinate" for t in self.attr_types.values()):
             # '(lat, lon)' claims fuse per-axis and recompose — the reference
             # drops coordinate facts entirely (see operators/coordinates.py)
             from trustfuse_spark.operators.coordinates import fuse_with_coordinates
 
-            return fuse_with_coordinates(self.claims, fn, **kwargs)
-        return fn(self.claims, **kwargs)
+            return fuse_with_coordinates(
+                self.claims, lambda c, **kw: pipeline.fuse(c, model, **kw), **kwargs
+            )
+        return pipeline.fuse(self.claims, model, **kwargs)
 
     def triples(self, result: FusionResult) -> DataFrame:
-        return truth_to_triples(result.truth)
+        return pipeline.truth_to_triples(result.truth)
 
     def evaluate(self, result: FusionResult, per_attr: bool = True) -> DataFrame:
         if self.gt is None:

@@ -1,19 +1,19 @@
-"""Scalar preprocessing functions (SURVEY §2.3, F1-F8/F11/F12).
+"""Scalar preprocessing functions (SURVEY §2.3, F2/F4-F8/F12).
 
 Each reimplements the semantics of a reference pandas ``Series.apply``
 function as a native Spark expression (JVM-side, codegen'd) — pandas UDF only
 where heuristics genuinely need Python (``extract_authors``).
 
 Reference citations (behavioral parity targets, no code copied):
-  remove_space                preprocessing.py:168-173
   extract_number              preprocessing.py:106-119
-  extract_number_with_commas  preprocessing.py:150-165
   extract_time/get_minutes    preprocessing.py:86-134
   transform_date              preprocessing.py:137-147
   extract_authors             preprocessing.py:228-252
   split_authors               preprocessing.py:255-257
-  date2seconds/seconds2date   dataset_generation/utils.py:17-42
   is_ip_or_mac                automatic_labeling.py:27-47
+
+The reference's remove_space (F1, preprocessing.py:168-173) is the
+``F.trim`` of ``pipeline.typed_claims``.
 """
 
 from __future__ import annotations
@@ -26,24 +26,12 @@ from pyspark.sql.functions import pandas_udf
 
 # Python re: r"[-+]?\d*\.\d+|\d+"  — first match wins; decimal preferred.
 _NUM_RE = r"[-+]?\d*\.\d+|\d+"
-_NUM_COMMAS_RE = r"[-+]?[\d,]*\.\d+|[\d,]+"
-
-
-def remove_space(c: Column) -> Column:
-    """str.strip equivalent (F1)."""
-    return F.trim(c)
 
 
 def extract_number(c: Column) -> Column:
     """First float/int literal in the string -> double, else null (F2)."""
     m = F.regexp_extract(c.cast("string"), _NUM_RE, 0)
     return F.when(m != "", m.cast("double"))
-
-
-def extract_number_with_commas(c: Column) -> Column:
-    """Like F2 but tolerates 1,234,567.8 thousand separators (F3)."""
-    m = F.regexp_extract(c.cast("string"), _NUM_COMMAS_RE, 0)
-    return F.when(m != "", F.regexp_replace(m, ",", "").cast("double"))
 
 
 def extract_time_minutes(c: Column) -> Column:
@@ -86,15 +74,6 @@ def extract_authors(s: pd.Series) -> pd.Series:
     """F7 as an Arrow-batched pandas UDF (heuristic-heavy -> Python, but
     never per-row over the wire)."""
     return s.map(extract_authors_py)
-
-
-def date2seconds(c: Column) -> Column:
-    """ISO 'YYYY-MM-DDTHH:MM:SSZ' -> epoch seconds (F11)."""
-    return F.unix_timestamp(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-
-
-def seconds2date(c: Column) -> Column:
-    return F.date_format(F.from_unixtime(c), "yyyy-MM-dd'T'HH:mm:ss'Z'")
 
 
 _IP_OR_MAC_RE = (

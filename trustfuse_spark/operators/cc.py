@@ -23,10 +23,10 @@ and Beyond", public literature) as DataFrame aggregations:
 
 Both are one groupBy + one explode; the pair converges in O(log n) rounds.
 Convergence check = one scalar agg (edge-set hash-sum). Skew: hub nodes
-(a celebrity entity in a mention graph) concentrate one group; the groupBy
-is an algebraic min + collect of DISTINCT smaller neighbors, and AQE's skew
-handling splits the shuffle — for adversarial hubs pass `salt_hubs=True`
-to pre-aggregate neighbor minima in two phases.
+(a celebrity entity in a mention graph) concentrate one group, but the
+groupBy is an algebraic min, which Spark splits into a partial and a final
+aggregate: a hub reaches its reducer as at most one row per map partition,
+so salting the min in two phases would add a shuffle and save nothing.
 
 The bound caps driver memory, not time: the local path won at every
 measured size. Random graphs with 1.5 nodes per edge, local vs distributed
@@ -53,14 +53,7 @@ from trustfuse_spark.operators.fusion.base import checkpoint, iterate, release, 
 LOCAL_MAX_EDGES = 4_000_000
 
 
-def _degree_capped_min(edges: DataFrame, salt: int) -> DataFrame:
-    """Two-phase (salted) min-neighbor per node for hub resilience."""
-    salted = edges.withColumn("__salt", F.pmod(F.xxhash64("dst"), F.lit(salt)))
-    partial = salted.groupBy("src", "__salt").agg(F.min("dst").alias("m"))
-    return partial.groupBy("src").agg(F.min("m").alias("m"))
-
-
-def _star_round(edges: DataFrame, large: bool, salt_hubs: bool) -> DataFrame:
+def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     """One large- or small-star round over a symmetric edge list."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -69,10 +62,7 @@ def _star_round(edges: DataFrame, large: bool, salt_hubs: bool) -> DataFrame:
         nbrs = sym  # all neighbors participate in min; larger ones re-point
     else:
         nbrs = sym.filter(F.col("dst") <= F.col("src"))
-    if salt_hubs:
-        mins = _degree_capped_min(nbrs, 32)
-    else:
-        mins = nbrs.groupBy("src").agg(F.min("dst").alias("m"))
+    mins = nbrs.groupBy("src").agg(F.min("dst").alias("m"))
     mins = mins.withColumn("m", F.least("m", F.col("src")))
     if large:
         out = (
@@ -115,7 +105,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    salt_hubs: bool = False,
 ) -> DataFrame:
     """-> (node, component) with component = min node id of the component.
 
@@ -123,8 +112,8 @@ def connected_components(
     preferred at scale — hash surface forms to ids first). A node whose
     only edges are self-loops is not in the output. Edge lists of at most
     ``LOCAL_MAX_EDGES`` edges are labelled on the driver and come back
-    marked for broadcast; ``max_rounds`` and ``salt_hubs`` apply to the
-    distributed star rounds above that bound.
+    marked for broadcast; ``max_rounds`` applies to the distributed star
+    rounds above that bound.
     """
     # Duplicates stay until the path is known: the local labelling ignores
     # them, so only the star rounds pay a distinct shuffle.
@@ -152,8 +141,7 @@ def connected_components(
         )
 
     def star_round(e: DataFrame) -> DataFrame:
-        e = _star_round(e, large=True, salt_hubs=salt_hubs)
-        return _star_round(e, large=False, salt_hubs=salt_hubs)
+        return _star_round(_star_round(e, large=True), large=False)
 
     def signature(e: DataFrame) -> tuple:
         row = e.agg(

@@ -347,13 +347,9 @@ def luhn_valid(candidate: Column) -> Column:
     return (n >= 13) & (n <= 19) & (total % 10 == 0)
 
 
-def ccnum_candidates(text: Column, valid_only: bool = True) -> Column:
-    """Array of card-shaped spans in ``text``; ``valid_only`` keeps only
-    Luhn-passing candidates."""
-    cands = F.regexp_extract_all(text, F.lit(CCNUM_PATTERN), 0)
-    if valid_only:
-        cands = F.filter(cands, luhn_valid)
-    return cands
+def ccnum_candidates(text: Column) -> Column:
+    """Array of the Luhn-passing card-shaped spans in ``text``."""
+    return F.filter(F.regexp_extract_all(text, F.lit(CCNUM_PATTERN), 0), luhn_valid)
 
 
 def ccnum_redact(text: Column) -> Column:

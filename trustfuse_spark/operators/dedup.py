@@ -564,7 +564,6 @@ def neardup_drop_ids(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    salt_hubs: bool = False,
 ) -> DataFrame:
     """Near-dup pairs -> drop list: connected components over the pair graph
     (transitive closure — A~B, B~C puts A,C in one cluster even if the LSH
@@ -576,11 +575,11 @@ def neardup_drop_ids(
     `plans.curate.curate_corpus(drop_ids=...)`. CC is operators/cc.py: pair
     graphs of at most ``cc.LOCAL_MAX_EDGES`` edges are labelled on the
     driver in one numpy pass; larger ones run the large-star / small-star
-    rounds, where ``salt_hubs`` handles a viral doc with millions of
-    near-dups."""
+    rounds, whose partial min aggregates take a viral doc with millions of
+    near-dups as one row per map partition."""
     from trustfuse_spark.operators.cc import connected_components
 
-    comp = connected_components(pairs, src=id_a, dst=id_b, salt_hubs=salt_hubs)
+    comp = connected_components(pairs, src=id_a, dst=id_b)
     return comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("drop_id")
     )

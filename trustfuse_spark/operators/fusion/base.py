@@ -94,6 +94,28 @@ def drop_incomplete_claims(claims: DataFrame) -> DataFrame:
     return claims.filter(complete & finite)
 
 
+def quantity_claims(claims: DataFrame) -> DataFrame:
+    """The numeric models' input (catd, gtm, kdem), materialized: the
+    claims of quantity attributes only, as the reference's numeric models
+    take (model.py:41-45), that carry a number."""
+    return checkpoint(
+        claims.filter(F.col("claim_type") == "quantity")
+        .filter(F.col("value_num").isNotNull())
+        .select(*FACT_KEYS, "source", "value_num")
+    )
+
+
+def facts_per_source(claims: DataFrame) -> DataFrame:
+    """count_s as ``cnt``: facts per (bucket, source); a source claiming a
+    fact twice counts once."""
+    return (
+        claims.select(*WEIGHT_KEYS, *FACT_KEYS)
+        .distinct()
+        .groupBy(*WEIGHT_KEYS)
+        .agg(F.count("*").alias("cnt"))
+    )
+
+
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and cut its lineage (localCheckpoint: a lost block
     cannot be recomputed; a lazy one materializes in its first action). On a

@@ -43,9 +43,10 @@ from trustfuse_spark.operators.fusion.base import (
     WEIGHT_KEYS,
     FusionResult,
     assemble_truth,
-    checkpoint,
+    facts_per_source,
     iterate,
     median_per_fact,
+    quantity_claims,
     rel_l2_change,
     snap_to_claimed,
 )
@@ -71,7 +72,6 @@ def fuse_catd(
     claims: DataFrame,
     max_itr: int = 10,
     tol: float | None = 0.1,
-    numeric_only: bool = True,
     zero_tol: float = 1e-9,
 ) -> FusionResult:
     """zero_tol: residual sums below this count as the reference's exact
@@ -80,20 +80,8 @@ def fuse_catd(
     shuffle-stable equivalent (SURVEY §7.4 risk 1)."""
     if max_itr < 1:
         raise ValueError("max_itr must be >= 1")
-    if numeric_only:
-        claims = claims.filter(F.col("claim_type") == "quantity")
-    claims = checkpoint(
-        claims.filter(F.col("value_num").isNotNull()).select(
-            *FACT_KEYS, "source", "value_num"
-        )
-    )
-    # count_s: #facts per source (a source claiming a fact twice counts once)
-    counts = (
-        claims.select(*WEIGHT_KEYS, *FACT_KEYS)
-        .distinct()
-        .groupBy(*WEIGHT_KEYS)
-        .agg(F.count("*").alias("cnt"))
-    )
+    claims = quantity_claims(claims)
+    counts = facts_per_source(claims)
     init_truth = median_per_fact(claims)  # lazy
 
     def truth_of(weights: DataFrame | None) -> DataFrame:

@@ -34,7 +34,9 @@ from trustfuse_spark.operators.fusion.base import (
     FusionResult,
     assemble_truth,
     checkpoint,
+    facts_per_source,
     iterate,
+    quantity_claims,
     rel_l2_change,
     snap_to_claimed,
 )
@@ -49,15 +51,8 @@ def fuse_gtm(
     mu0: float = 0.0,
     sigma0: float = 1.0,
     delta0: float = 1.0,
-    numeric_only: bool = True,
 ) -> FusionResult:
-    if numeric_only:
-        claims = claims.filter(F.col("claim_type") == "quantity")
-    original = checkpoint(
-        claims.filter(F.col("value_num").isNotNull()).select(
-            *FACT_KEYS, "source", "value_num"
-        )
-    )
+    original = quantity_claims(claims)
     prior = original.groupBy(*FACT_KEYS).agg(
         F.expr("percentile(value_num, 0.5)").alias("prior")
     )
@@ -75,12 +70,7 @@ def fuse_gtm(
     cn = checkpoint(
         kept.select(*FACT_KEYS, "source", (F.col("value_num") - F.col("prior")).alias("cn"))
     )
-    counts = (
-        cn.select(*WEIGHT_KEYS, *FACT_KEYS)
-        .distinct()
-        .groupBy(*WEIGHT_KEYS)
-        .agg(F.count("*").alias("cnt"))
-    )
+    counts = facts_per_source(cn)
 
     def maximization(truth_df: DataFrame) -> DataFrame:
         return (

@@ -37,8 +37,9 @@ from trustfuse_spark.operators.fusion.base import (
     FusionResult,
     argmax_per_fact,
     assemble_truth,
-    checkpoint,
+    facts_per_source,
     iterate,
+    quantity_claims,
     settled,
 )
 
@@ -141,17 +142,10 @@ def fuse_kdem(
     tol: float = 1e-5,
     method: str = "gaussian",
     h: float = -1.0,
-    numeric_only: bool = True,
 ) -> FusionResult:
     if max_itr < 1:
         raise ValueError("max_itr must be >= 1")
-    if numeric_only:
-        claims = claims.filter(F.col("claim_type") == "quantity")
-    base = checkpoint(
-        claims.filter(F.col("value_num").isNotNull()).select(
-            *FACT_KEYS, "source", "value_num"
-        )
-    )
+    base = quantity_claims(claims)
     if h < 0:
         first_key = base.orderBy(*FACT_KEYS).select(*FACT_KEYS).first()
         first_vals = (
@@ -166,12 +160,7 @@ def fuse_kdem(
         )
         h = mad_bandwidth(first_vals)
 
-    counts = (
-        base.select(*WEIGHT_KEYS, *FACT_KEYS)
-        .distinct()
-        .groupBy(*WEIGHT_KEYS)
-        .agg(F.count("*").alias("cnt"))
-    )
+    counts = facts_per_source(base)
     flen = Window.partitionBy(*FACT_KEYS)
     weighted = base.withColumn(
         "w", 1.0 / F.count("*").over(flen)

@@ -3,8 +3,8 @@ model (reference crh.py:92-103 ``initialize_truth``), the walking-skeleton
 fuser of SURVEY §7.2 slice 0.
 
 Categorical facts -> mode (tie: lexicographically smallest, = pandas
-``mode().iloc[0]``); numeric facts -> exact median, optionally snapped to the
-nearest claimed value so emitted triples always carry a claimed object.
+``mode().iloc[0]``); numeric facts -> exact median, snapped to the nearest
+claimed value so emitted triples always carry a claimed object.
 Weights = each source's share of claims agreeing with the fused truth
 (a simple accuracy, for rank diagnostics — the reference's majority init has
 no weight concept).
@@ -28,16 +28,14 @@ from trustfuse_spark.operators.fusion.base import (
 )
 
 
-def fuse_majority(claims: DataFrame, snap_numeric: bool = True) -> FusionResult:
+def fuse_majority(claims: DataFrame) -> FusionResult:
     # mode/median/snap/weights each re-derive claims otherwise — with a
     # lazy extraction upstream that's 4-6 replays of the whole scan
     # (measured 10.7s -> ~2s on the docs pipeline at sf0.1)
     claims = checkpoint(claims)
     cat, num = split_claims(claims)
     cat_truth = mode_per_fact(cat)
-    num_truth = median_per_fact(num)
-    if snap_numeric:
-        num_truth = snap_to_claimed(num, num_truth)
+    num_truth = snap_to_claimed(num, median_per_fact(num))
     truth = assemble_truth(cat_truth, num_truth)
 
     # Source accuracy vs fused truth. claims ⋈ truth is fact-keyed on both

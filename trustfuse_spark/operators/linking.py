@@ -148,7 +148,6 @@ def canonicalize(
     mentions: DataFrame,
     links: DataFrame,
     surface_col: str = "surface",
-    salt_hubs: bool = False,
 ) -> DataFrame:
     """Attach canonical_id to every mention row.
 
@@ -157,9 +156,7 @@ def canonicalize(
     keep the test surface readable). Link graphs within
     ``cc.LOCAL_MAX_EDGES`` come back from the driver marked for broadcast,
     so the mentions are not shuffled for this join."""
-    comp = connected_components(
-        links, src="surface_a", dst="surface_b", salt_hubs=salt_hubs
-    ).select(F.col("node").alias(surface_col), F.col("component").alias("canonical_id"))
+    comp = connected_components(links, src="surface_a", dst="surface_b").select(F.col("node").alias(surface_col), F.col("component").alias("canonical_id"))
     return mentions.join(comp, surface_col, "left").withColumn(
         "canonical_id", F.coalesce("canonical_id", F.col(surface_col))
     )

@@ -1,22 +1,20 @@
-"""Z-order (Morton) clustering for multi-dimensional data skipping.
+"""Z-order (Morton) value for multi-dimensional data skipping.
 
 A partitioned table pruned on one key still scans everything when filtered
 on another; interleaving the bits of two sort keys into one Morton value
 and range-partitioning + sorting on it keeps rows close in BOTH dimensions,
 so min/max footer stats prune parquet row groups for either predicate —
-the standard lakehouse OPTIMIZE ZORDER BY step, here as plain DataFrame
-operations ahead of any sink.
+the standard lakehouse OPTIMIZE ZORDER BY step.
 
 The z-value is pure integer arithmetic (shift/mask/or, whole-stage
-codegen, SQL-replayable bit for bit); `cluster_by_zorder` is ONE
-repartitionByRange exchange (range boundaries from Spark's reservoir
-sample) + an in-partition sort — exactly the shuffle a sorted write needs
-anyway, no extra pass.
+codegen, SQL-replayable bit for bit); the correctness gate's ``asof_suite``
+checks it against an oracle. Clustering a table by it is
+``df.repartitionByRange(n, z).sortWithinPartitions(z)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -40,20 +38,3 @@ def z_value(a: Column, b: Column, bits: int = 16) -> Column:
         )
     return z
 
-
-def cluster_by_zorder(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Rows range-partitioned and sorted by the Morton value of
-    (``col_a``, ``col_b``) — write the result and both columns' footer
-    min/max ranges stay tight per file. Keeps a ``zval`` column so tests
-    and audits can assert the clustering."""
-    z = df.withColumn("zval", z_value(F.col(col_a), F.col(col_b), bits))
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    return z.repartitionByRange(int(parts), "zval").sortWithinPartitions("zval")

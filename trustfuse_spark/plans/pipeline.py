@@ -26,49 +26,39 @@ from trustfuse_spark.operators.fusion.truthfinder import fuse_truthfinder
 ATTR_TYPE_DEFAULT = "string"  # untyped attributes fuse categorically (model.py:159-165)
 
 
-def docs_to_claims(
-    docs: DataFrame,
-    attr_types: DataFrame | None = None,
-    use_arrow_udf: bool = False,
-) -> DataFrame:
-    """Extraction + typed preprocessing: docs -> long-form claims.
-
-    attr_types: optional dim table (attr, claim_type) — the reference's
-    externally supplied attribute-type dict (fusion_pipeline.py:61-71) as a
-    broadcast dim. Untyped attrs default to 'string'.
-    bucket_id is the doc's revision suffix; temporal sessionization lives in
-    operators/bucketize.py.
-    """
-    extractor = extract_claims_arrow if use_arrow_udf else extract_claims
-    claims = extractor(docs)
-    if attr_types is not None:
-        claims = claims.join(F.broadcast(attr_types), "attr", "left")
-    else:
-        # Fixture attr naming: P_qty -> quantity, P_time -> time, else string
-        claims = claims.withColumn(
-            "claim_type",
-            F.when(F.col("attr") == "P_qty", "quantity")
-            .when(F.col("attr") == "P_time", "time")
-            .when(F.col("attr").startswith("P_ent"), "entity")
-            .otherwise(ATTR_TYPE_DEFAULT),
-        )
+def typed_claims(claims: DataFrame) -> DataFrame:
+    """Claim typing: a NULL claim_type defaults to 'string', value_num is
+    the typed number of value_str, numeric claims without one are dropped
+    (the reference's model.py:145 NaN filter, after preprocessing coerced
+    them to NaN) and value_str is trimmed (its remove_space preprocess)."""
     claims = claims.withColumn(
         "claim_type", F.coalesce("claim_type", F.lit(ATTR_TYPE_DEFAULT))
     )
     claims = claims.withColumn(
-        "bucket_id",
-        F.element_at(F.split("doc_id", "_"), -1).cast("int"),
-    )
-    claims = claims.withColumn(
         "value_num", normalize_claim_value(F.col("value_str"), F.col("claim_type"))
     )
-    # Reference drops unparseable numeric cells at claim-matrix build
-    # (model.py:145 NaN filter after preprocessing coerced them to NaN).
     numeric_type = F.col("claim_type").isin("quantity", "time")
     claims = claims.filter(~(numeric_type & F.col("value_num").isNull()))
-    # Cleaned categorical value (reference remove_space preprocess).
-    claims = claims.withColumn("value_str", F.trim("value_str"))
-    return claims.select(
+    return claims.withColumn("value_str", F.trim("value_str"))
+
+
+def docs_to_claims(docs: DataFrame, use_arrow_udf: bool = False) -> DataFrame:
+    """Extraction + typed preprocessing: docs -> long-form claims.
+
+    Attributes are typed by the fixture's naming (P_qty -> quantity, P_time
+    -> time, P_ent* -> entity, else string); bucket_id is the doc's revision,
+    which extraction reads from the doc_id. Temporal sessionization lives in
+    operators/bucketize.py.
+    """
+    extractor = extract_claims_arrow if use_arrow_udf else extract_claims
+    claims = extractor(docs).withColumn(
+        "claim_type",
+        F.when(F.col("attr") == "P_qty", "quantity")
+        .when(F.col("attr") == "P_time", "time")
+        .when(F.col("attr").startswith("P_ent"), "entity")
+        .otherwise(ATTR_TYPE_DEFAULT),
+    )
+    return typed_claims(claims).select(
         "bucket_id", "source", "entity", "attr",
         "value_str", "value_num", "claim_type", "doc_id", "media_refs",
     )

@@ -10,9 +10,9 @@ the engine's long-form claims:
                       (source, entity, attr, value_str) via stack/melt
   load_bucket_dir   : one TSV per bucket (flight's yyyymmdd.txt) with
                       bucket_id from the file name
-  cumulative_union  : dynamic-dataset bucket i = union of buckets <= i
-                      (dataset.py:362-379) — resolved as a filter on the
-                      long table, never physical copies
+
+The dynamic dataset's cumulative bucket i = union of buckets <= i
+(dataset.py:362-379) is ``operators.bucketize.cumulative_bucket``.
 """
 
 from __future__ import annotations
@@ -204,11 +204,3 @@ def load_weather_dir(
         out = out.unionByName(p)
     return out
 
-
-def cumulative_union(claims: DataFrame, upto: int | None = None) -> DataFrame:
-    """Dynamic-dataset view: rows of all buckets <= upto (or a running
-    view when upto is None via a bucket_upto column crossjoin-free trick is
-    unnecessary — callers filter per bucket of interest)."""
-    if upto is None:
-        return claims
-    return claims.filter(F.col("bucket_id") <= upto)
